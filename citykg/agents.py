@@ -151,22 +151,32 @@ class StoreRegistry:
 
     The reference hard-codes the ontokgrouter registrations (one
     Blazegraph namespace per city); here a registration binds an
-    endpoint to either a materialized store directory (read lazily,
-    cached per registry) or an in-memory triples frame. Agents resolve
-    the store from each request's first IRI — the "set the route based
-    on the IRI" step in CityInformationAgent:163-167 /
-    DistanceAgent:96-101."""
+    endpoint to either a materialized store directory or an in-memory
+    triples frame. Agents resolve the store from each request's first
+    IRI — the "set the route based on the IRI" step in
+    CityInformationAgent:163-167 / DistanceAgent:96-101.
+
+    A store directory is read lazily and its frame cached per registry,
+    keyed on the store's `_manifest` file listing: every write, upsert,
+    delete and compaction appends a manifest file, so the first resolve
+    after one re-reads the store instead of serving a frame whose file
+    listing the write made stale."""
 
     def __init__(self, spark: SparkSession) -> None:
         self._spark = spark
         self._dirs: dict[str, str] = {}
         self._frames: dict[str, DataFrame] = {}
+        # store dir endpoint -> (manifest listing, frame read under it);
+        # one tuple per entry, so concurrent resolves never pair a frame
+        # with another read's listing
+        self._read: dict[str, tuple[frozenset[str], DataFrame]] = {}
 
     def register(self, endpoint: str, store_dir: str | None = None,
                  triples: DataFrame | None = None) -> None:
         if (store_dir is None) == (triples is None):
             raise ValueError("register exactly one of store_dir/triples")
         key = endpoint if endpoint.endswith("/") else endpoint + "/"
+        self._read.pop(key, None)
         if store_dir is not None:
             self._dirs[key] = store_dir
         else:
@@ -183,9 +193,15 @@ class StoreRegistry:
         ep = self.target_resource_id(iri)
         if ep is None:
             raise BadRequestException(f"no registered store for {iri!r}")
-        if ep not in self._frames:
-            self._frames[ep] = materialize.read_triples(self._spark, self._dirs[ep])
-        return self._frames[ep]
+        if ep in self._frames:
+            return self._frames[ep]
+        m = materialize.manifest_path(self._dirs[ep])
+        stamp = frozenset(os.listdir(m)) if os.path.isdir(m) else frozenset()
+        cached = self._read.get(ep)
+        if cached is None or cached[0] != stamp:
+            cached = (stamp, materialize.read_triples(self._spark, self._dirs[ep]))
+            self._read[ep] = cached
+        return cached[1]
 
 
 # ---------------------------------------------------------------------------

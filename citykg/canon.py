@@ -264,7 +264,10 @@ def connected_components_shortcut(edges: DataFrame, max_iter: int = 16) -> DataF
     propagation needs O(diameter) — use this variant when components can
     be long chains (grid clusters, road networks) rather than the star
     shapes same_as_edges emits. Same contract: edges (src, dst) string
-    ids -> (id, component = min reachable id)."""
+    ids -> (id, component = min reachable id).
+
+    Raises RuntimeError when `max_iter` rounds end with labels still
+    moving: unconverged labels are wrong components, never a result."""
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -309,5 +312,8 @@ def connected_components_shortcut(edges: DataFrame, max_iter: int = 16) -> DataF
         ).where(F.col("comp") != F.col("_old"))
         lab = l2
         if moved.isEmpty():
-            break
-    return lab.select("id", "comp").withColumnRenamed("comp", "component")
+            return lab.select("id", "comp").withColumnRenamed("comp", "component")
+    raise RuntimeError(
+        f"connected_components_shortcut did not converge in max_iter={max_iter} "
+        "rounds: labels were still moving after the last round"
+    )

@@ -19,11 +19,13 @@ instead of subprocess chains.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schema import MANIFEST_SCHEMA
+from .session import stable
 
 DEFAULT_BUCKETS = 64
 
@@ -180,31 +182,49 @@ def upsert_triples(
     DB: a feature's new version replaces its previous rows): delete every
     subject present in the incoming batch from the store, then APPEND the
     batch as a new manifest-tracked stage keyed by the input snapshot.
-    The delete rewrites only the buckets the incoming subjects hash to;
-    the append adds files without touching existing ones (Iceberg:
-    a DELETE + append in one transaction). The incoming subject set stays
-    a DataFrame end-to-end — no driver-side collect of ids."""
-    path = os.path.join(out_dir, "triples")
-    subj_df = triples.select("subj").distinct()
-    if os.path.exists(path):
-        _delete_subjects_df(
-            spark, out_dir, subj_df, n_buckets=n_buckets,
-            drop_references=False, stage=f"upsert-delete:{input_snapshot}",
-        )
-    bt = with_bucket(triples, n_buckets)
-    # keep the subject-sorted file property write_triples establishes —
-    # row-group subj min/max pruning must survive upserts too
-    _adapter(spark, out_dir).append(bt.sortWithinPartitions("graph", "bucket", "subj"))
-    counts = bt.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-    _append_manifest(
-        spark,
-        out_dir,
-        [
-            (f"upsert:{input_snapshot}", str(int(r.bucket)), input_snapshot,
-             r.n, "done", 1, 0)
-            for r in sorted(counts, key=lambda r: int(r.bucket))
-        ],
-    )
+
+    Partition-exact rewrite, then append: the batch is bucketed and
+    cached once; the delete rewrites only the (graph, bucket) partitions
+    that actually hold a row of a batch subject (found by one narrow scan
+    of the batch's buckets, see `_delete_subjects_df`); the append adds
+    files without touching existing ones (Iceberg: a copy-on-write
+    DELETE + append in one transaction). Both stages' manifest rows
+    (`upsert-delete:<snap>`, `upsert:<snap>`) land in one append AFTER
+    the data, so a replay of a crashed upsert re-deletes and re-appends
+    (streaming.upsert_epoch). The incoming subject set stays a DataFrame
+    end-to-end — no driver-side collect of ids."""
+    t0 = time.time()
+    adapter = _adapter(spark, out_dir)
+    # the batch is extracted ONCE: the per-bucket count fills the cache,
+    # and the delete scan and the append reuse it. A cache, not a
+    # checkpoint: the cached relation reports its real size, so the
+    # planner can broadcast the batch keys into the delete's joins (a
+    # checkpoint carries the source plan's size estimate instead)
+    bt = with_bucket(triples, n_buckets).persist()
+    try:
+        counts = {
+            int(r.bucket): int(r.n)
+            for r in bt.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+        }
+        if not counts:
+            return
+        rows: list[tuple] = []
+        if adapter.exists():
+            removed = _delete_subjects_df(
+                spark, out_dir, bt, sorted(counts), drop_references=False
+            )
+            wall = int((time.time() - t0) * 1000)
+            rows += [(f"upsert-delete:{input_snapshot}", str(b), "", n, "done", 1, wall)
+                     for b, n in sorted(removed.items())]
+        # keep the subject-sorted file property write_triples establishes —
+        # row-group subj min/max pruning must survive upserts too
+        adapter.append(bt.sortWithinPartitions("graph", "bucket", "subj"))
+    finally:
+        bt.unpersist()
+    wall = int((time.time() - t0) * 1000)
+    rows += [(f"upsert:{input_snapshot}", str(b), input_snapshot, n, "done", 1, wall)
+             for b, n in sorted(counts.items())]
+    _append_manifest(spark, out_dir, rows)
 
 
 def delete_subjects(
@@ -219,96 +239,120 @@ def delete_subjects(
     per-object cascade delete via DBDeleteWorker) on the bucketed store:
     remove every triple OF the given subject IRIs — and, with
     `drop_references`, every triple POINTING AT them — by rewriting ONLY
-    the affected (graph, bucket) partitions. Subject bucketing makes the
-    touched-partition set computable up front (partition pruning on
-    write); untouched buckets keep their files byte-identical. Appends
-    per-bucket manifest rows so the deletion is lineage-tracked like any
-    other stage. Returns the number of rows removed.
+    the (graph, bucket) partitions where a row dies. Subject bucketing
+    bounds where a subject's rows can be; one narrow scan finds the exact
+    partitions (partition-exact rewrite), and every other partition keeps
+    its files byte-identical. Appends per-bucket manifest rows so the
+    deletion is lineage-tracked like any other stage. Returns the number
+    of rows removed.
 
-    (On Iceberg this is `DELETE FROM ... WHERE subj IN (...)` with
-    merge-on-read delete files; the parquet emulation rewrites the pruned
-    partition set and clears partitions that become empty.)
+    (On Iceberg this is a copy-on-write `DELETE FROM ... WHERE subj IN
+    (...)`; the parquet emulation rewrites the touched partitions and
+    clears partitions that become empty.)
     """
-    return _delete_subjects_df(
-        spark,
-        out_dir,
-        spark.createDataFrame([(s,) for s in subjects], "subj string"),
-        n_buckets=n_buckets,
-        drop_references=drop_references,
-        stage=stage,
+    subj_b = with_bucket(
+        spark.createDataFrame([(s,) for s in subjects], "subj string"), n_buckets
     )
+    buckets = sorted(int(r.bucket) for r in subj_b.select("bucket").distinct().collect())
+    if not buckets:
+        return 0
+    removed = _delete_subjects_df(
+        spark, out_dir, subj_b, buckets, drop_references=drop_references
+    )
+    _append_manifest(
+        spark, out_dir,
+        [(stage, str(b), "", n, "done", 1, 0) for b, n in sorted(removed.items())],
+    )
+    return sum(removed.values())
 
 
 def _delete_subjects_df(
     spark: SparkSession,
     out_dir: str,
-    subj_df: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
+    subj_b: DataFrame,
+    buckets: list[int],
     drop_references: bool = True,
-    stage: str = "delete",
-) -> int:
-    """DataFrame-core of delete_subjects — the subject set never passes
-    through the driver. The anti-joins carry NO broadcast hint: the
-    checkpointed subject set has accurate size stats, so the planner
-    broadcasts it when it fits and falls back to a shuffle join when a
-    100 TB-scale delete batch doesn't (a mandatory hint would OOM there)."""
-    path = os.path.join(out_dir, "triples")
-    subj_df = subj_df.select("subj").distinct().localCheckpoint(eager=True)
-    t = read_triples(spark, out_dir)
-    affected = with_bucket(subj_df, n_buckets).select("bucket").distinct()
-    if drop_references:
-        refs = t.join(
-            subj_df.withColumnRenamed("subj", "obj"), "obj"
-        ).select("bucket").distinct()
-        affected = affected.union(refs).distinct()
-    buckets = sorted(r.bucket for r in affected.collect())
-    if not buckets:
-        return 0
+) -> dict[int, int]:
+    """DataFrame-core of delete_subjects and upsert_triples: remove the
+    rows of every subject in `subj_b` (a frame with `subj` and its
+    `bucket`, cheap to re-read; `buckets` lists its buckets) and, with `drop_references`,
+    every row whose `obj` is one of them. Returns removed rows per bucket
+    — every bucket of `buckets` plus any bucket a reference died in.
 
-    part = t.where(F.col("bucket").isin(buckets))
-    before = {
-        (r.graph, r.bucket): r.n
-        for r in part.groupBy("graph", "bucket").agg(F.count("*").alias("n")).collect()
-    }
-    keep = part.join(subj_df, "subj", "left_anti")
-    if drop_references:
-        keep = keep.join(
-            subj_df.withColumnRenamed("subj", "obj"), "obj", "left_anti"
-        )
-    # materialize the survivor set BEFORE touching the files it reads from
-    # (the overwrite would otherwise invalidate the lazy plan's file list)
-    keep = keep.select(*[c for c in t.columns]).localCheckpoint(eager=True)
-    after = {
-        (r.graph, r.bucket): r.n
-        for r in keep.groupBy("graph", "bucket").agg(F.count("*").alias("n")).collect()
-    }
-    _adapter(spark, out_dir).overwrite_partitions(
-        keep.sortWithinPartitions("graph", "bucket", "subj")
+    Partition-exact rewrite:
+    1. one narrow scan (subj, obj and the partition columns only) of the
+       subjects' buckets — across EVERY graph, since a subject's old
+       version can have rows in a graph its new version lacks — plus,
+       with `drop_references`, of the whole store for referencing rows,
+       grouped by (graph, bucket): the exact partitions where rows die
+       and how many die in each;
+    2. "before" counts from parquet footers (metadata, no data read);
+    3. partitions whose rows all die are cleared, the rest of the
+       touched set is rewritten without its dying rows. Nothing else is
+       read or written.
+    The joins carry NO broadcast hint: callers pass a subject frame with
+    accurate size stats (a local relation or a filled cache), so the
+    planner broadcasts it when it fits and falls back to a shuffle join
+    when a 100 TB-scale batch doesn't (a mandatory hint would OOM
+    there)."""
+    adapter = _adapter(spark, out_dir)
+    t = adapter.read()
+    keys = subj_b.select("subj", "bucket")
+    objs = keys.select(F.col("subj").alias("obj"))
+    dying = (
+        t.where(F.col("bucket").isin(buckets))
+        .select("subj", "graph", "bucket")
+        .join(keys, ["subj", "bucket"], "left_semi")
+        .select("graph", "bucket")
     )
+    if drop_references:
+        # referencing rows that are not already subject rows of a victim,
+        # so a row matching both is counted once
+        dying = dying.unionByName(
+            t.select("subj", "obj", "graph", "bucket")
+            .join(objs, "obj", "left_semi")
+            .join(keys, ["subj", "bucket"], "left_anti")
+            .select("graph", "bucket")
+        )
+    touched = {
+        (r.graph, int(r.bucket)): int(r.n)
+        for r in dying.groupBy("graph", "bucket").agg(F.count("*").alias("n")).collect()
+    }
+    removed = dict.fromkeys(buckets, 0)
+    for (_, b), n in touched.items():
+        removed[b] = removed.get(b, 0) + n
+    before = {k: sum(adapter.file_counts(*k).values()) for k in touched}
+    cleared = [k for k, n in touched.items() if n >= before[k]]
+    rewrite = [k for k in touched if k not in cleared]
+    if rewrite:
+        keep = t.where(_partitions_pred(rewrite)).join(keys, ["subj", "bucket"], "left_anti")
+        if drop_references:
+            keep = keep.join(objs, "obj", "left_anti")
+        # materialize the survivor set BEFORE touching the files it reads
+        # from (the overwrite would otherwise invalidate the lazy plan's
+        # file list)
+        keep = stable(keep.select(*t.columns))
+        adapter.overwrite_partitions(keep.sortWithinPartitions("graph", "bucket", "subj"))
     # dynamic overwrite only replaces partitions present in `keep`; a
-    # partition whose rows ALL died must be cleared explicitly (Iceberg's
-    # snapshot delete would handle this natively)
-    import shutil
+    # partition whose rows ALL died is cleared explicitly (Iceberg's
+    # snapshot delete handles this natively)
+    for g, b in cleared:
+        shutil.rmtree(adapter.partition_dir(g, b))
+    return removed
 
-    for (graph, bucket), n in before.items():
-        if (graph, bucket) not in after:
-            d = os.path.join(path, f"graph={graph}", f"bucket={bucket}")
-            if os.path.exists(d):
-                shutil.rmtree(d)
-    removed_per_bucket: dict[int, int] = {}
-    for (graph, bucket), n in before.items():
-        removed_per_bucket[bucket] = removed_per_bucket.get(bucket, 0) + n - after.get(
-            (graph, bucket), 0
-        )
-    _append_manifest(
-        spark,
-        out_dir,
-        [
-            (stage, str(b), "", removed, "done", 1, 0)
-            for b, removed in sorted(removed_per_bucket.items())
-        ],
-    )
-    return sum(removed_per_bucket.values())
+
+def _partitions_pred(keys):
+    """Predicate selecting exactly the (graph, bucket) partitions `keys`:
+    an OR-chain of per-column equality conjunctions, the canonical
+    partition-filter shape every Spark version turns into
+    PartitionFilters. (Spark 4.1 also prunes a struct(graph,
+    bucket).isin([...]) spelling, but struct-isin pruning is newer and
+    less portable; tests/test_store_conformance.py pins this shape.)"""
+    pred = None
+    for g, b in sorted(keys):
+        term = (F.col("graph") == g) & (F.col("bucket") == b)
+        pred = term if pred is None else (pred | term)
+    return pred
 
 
 def compact_store(
@@ -377,21 +421,9 @@ def compact_store(
         if fail_after_groups is not None and gi >= fail_after_groups:
             raise RuntimeError("injected failure for compaction resume test")
         t0 = time.time()
-        keys = {(g, b) for g, b, _ in grp}
-        # group predicate as an OR-chain of per-column equality
-        # conjunctions: the canonical partition-filter shape every Spark
-        # version turns into PartitionFilters. (Spark 4.1 also prunes the
-        # struct(graph, bucket).isin([...]) spelling this replaced —
-        # probe-verified — but struct-isin pruning is newer and less
-        # portable; the explicit conjunction shape is the one the
-        # conformance suite pins.)
-        pred = None
-        for g, b in sorted(keys):
-            term = (F.col("graph") == g) & (F.col("bucket") == b)
-            pred = term if pred is None else (pred | term)
         part = (
             read_triples(spark, out_dir)
-            .where(pred)
+            .where(_partitions_pred((g, b) for g, b, _ in grp))
             .repartition("graph", "bucket")
             .sortWithinPartitions("graph", "bucket", "subj")
             # materialize BEFORE the overwrite: the rewrite reads the very

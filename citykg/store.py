@@ -20,6 +20,11 @@ Mapping table (parquet emulation -> Iceberg):
 | list_partitions()       | driver-side directory listing              | SELECT ... FROM tbl.partitions (metadata)     |
 | file_counts(graph, b)   | parquet FOOTER num_rows per file           | tbl.files metadata table (record_count)       |
 
+The emulation's upsert (materialize.upsert_triples) is a DELETE on the
+touched (graph, bucket) partitions — overwrite_partitions of their
+survivors, found by one narrow scan — plus a fast append of the batch:
+Iceberg's copy-on-write `DELETE` + `append`.
+
 Semantics the conformance suite asserts on BOTH sides of the swap:
 
 1. append adds files only — pre-existing files stay byte-identical

@@ -41,6 +41,19 @@ def _rest(spark, path: str):
         return json.load(r)
 
 
+def _footer_rows(spark, store: str) -> dict[tuple[str, int, str], int]:
+    """(graph, bucket, file) -> rows, from parquet footers: a new key after
+    a write is a file the write added to (or rewrote into) that partition."""
+    from citykg.store import ParquetStoreAdapter
+
+    adapter = ParquetStoreAdapter(spark, store)
+    return {
+        (g, b, f): n
+        for g, b, _ in adapter.list_partitions()
+        for f, n in adapter.file_counts(g, b).items()
+    }
+
+
 def _stage_a_docs(spark, repl: int) -> str:
     """Stage the replicated corpus as a 128-file parquet dir (the
     production-input stand-in; NOT part of any timed phase)."""
@@ -178,10 +191,18 @@ def main() -> None:
             )
         )
         n = batch.count()
+        before = _footer_rows(spark, store)
         materialize.upsert_triples(
             spark, batch, store, n_buckets=a.buckets, input_snapshot="scale-r5-v2"
         )
-        return f"{n} upserted subjects"
+        new = {k: v for k, v in _footer_rows(spark, store).items() if k not in before}
+        results["upsert_partitions_rewritten"] = len({k[:2] for k in new})
+        results["upsert_write_amp"] = round(sum(new.values()) / max(n, 1), 2)
+        return (
+            f"{n} upserted subjects, {results['upsert_partitions_rewritten']} "
+            f"partitions rewritten, rows written / batch rows = "
+            f"{results['upsert_write_amp']}"
+        )
 
     results["upsert"] = phase("upsert", p_upsert)
 

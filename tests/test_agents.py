@@ -564,6 +564,35 @@ def test_store_registry_routes_requests(spark, triples, tmp_path):
     assert out["cityobjectinformation"][0]["attributes"] == []
 
 
+def test_store_registry_sees_upserts(spark, tmp_path):
+    """One registry across a write: the upsert rewrites the partition
+    the first resolve listed, and the same request through the same
+    registry returns the new value (not a stale file listing)."""
+    from citykg.agents import StoreRegistry
+
+    def rows(name):
+        return spark.createDataFrame(
+            [(_iri(i), "ocgml:name", f"{name}{i}", "literal", None, "cityobject", "d", 0, i)
+             for i in (1, 2)],
+            "subj string, pred string, obj string, obj_type string, "
+            "datatype string, graph string, doc_id string, span_idx int, pos int",
+        )
+
+    store = str(tmp_path / "store")
+    materialize.write_triples(spark, rows("v1_"), store, n_buckets=2)
+    reg = StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=store)
+    req = {"iris": [_iri(1)]}
+
+    def names():
+        out = dispatch(spark, None, "/cityobjectinformation", req, registry=reg)
+        return [a["obj"] for a in out["cityobjectinformation"][0]["attributes"]]
+
+    assert names() == ["v1_1"]
+    materialize.upsert_triples(spark, rows("v2_"), store, n_buckets=2, input_snapshot="v2")
+    assert names() == ["v2_1"]
+
+
 def test_dispatch_unknown_route(spark, triples):
     with pytest.raises(BadRequestException):
         dispatch(spark, triples, "/nope", {"iris": []})

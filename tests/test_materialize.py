@@ -1,5 +1,7 @@
 """Materialize: bucketed layout, lineage manifests, kill-and-resume."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -7,7 +9,13 @@ from pyspark.sql import functions as F
 from citykg import materialize
 from citykg.extract import extract_triples
 from citykg.fixtures import synth_docs
+from citykg.store import ParquetStoreAdapter
 from conftest import SF_SMOKE
+
+TRIPLE_SCHEMA = (
+    "subj string, pred string, obj string, obj_type string, datatype string, "
+    "graph string, doc_id string, span_idx int, pos int"
+)
 
 
 @pytest.fixture(scope="module")
@@ -147,6 +155,24 @@ def test_delete_subjects_surgical_rewrite(spark, triples, tmp_path_factory):
                 for f in files:
                     p = os.path.join(root, f)
                     pre_files[p] = os.path.getmtime(p)
+    # partition-exact: a partition INSIDE a touched bucket that holds no
+    # victim row and no reference to one is not rewritten either
+    dying = {
+        (r.graph, r.bucket)
+        for r in materialize.read_triples(spark, out)
+        .where(F.col("subj").isin(victims) | F.col("obj").isin(victims))
+        .select("graph", "bucket").distinct().collect()
+    }
+    adapter = ParquetStoreAdapter(spark, out)
+    spare = [
+        (g, b) for g, b, _ in adapter.list_partitions()
+        if b in touched and (g, b) not in dying
+    ]
+    assert spare
+    for g, b in spare:
+        d = adapter.partition_dir(g, b)
+        for f in os.listdir(d):
+            pre_files[os.path.join(d, f)] = os.path.getmtime(os.path.join(d, f))
 
     n_removed = materialize.delete_subjects(spark, out, victims, n_buckets=8)
     assert n_removed > 0
@@ -154,7 +180,8 @@ def test_delete_subjects_surgical_rewrite(spark, triples, tmp_path_factory):
     assert t.where(F.col("subj").isin(victims)).count() == 0
     assert t.where(F.col("obj").isin(victims)).count() == 0
     assert t.count() == total_before - n_removed
-    # untouched bucket files are byte-identical (never rewritten)
+    # untouched bucket files, and the spare partitions of touched
+    # buckets, are byte-identical (never rewritten)
     for p, mtime in pre_files.items():
         assert os.path.getmtime(p) == mtime, p
     # deletion is manifest-tracked
@@ -192,6 +219,115 @@ def test_upsert_replaces_and_appends(spark, triples, tmp_path_factory):
     m = materialize.read_manifest(spark, out)
     assert m.where(F.col("stage") == "upsert:v2").count() > 0
     assert m.where(F.col("stage") == "upsert-delete:v2").count() > 0
+
+
+def _rows(spark, spec):
+    """(subj, graph, obj) -> triple rows."""
+    return spark.createDataFrame(
+        [(s, "ocgml:name", o, "literal", None, g, "d", 0, 0) for s, g, o in spec],
+        TRIPLE_SCHEMA,
+    )
+
+
+def _file_mtimes(out):
+    root = os.path.join(out, "triples")
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root) for f in files if f.endswith(".parquet")
+    }
+
+
+def _bucket(spark, subj, n=2):
+    return materialize.with_bucket(_rows(spark, [(subj, "g", "o")]), n).first().bucket
+
+
+@pytest.fixture()
+def small_store(spark, tmp_path_factory):
+    """2 buckets: S* subjects in `building`, T* in `cityobject`; S1 also
+    has a row in `address` (next to T0's), S2 is alone in `solo`."""
+    out = str(tmp_path_factory.mktemp("store_small"))
+    spec = (
+        [(f"S{i}", "building", "v1") for i in range(12)]
+        + [(f"T{i}", "cityobject", "v1") for i in range(12)]
+        + [("S1", "address", "old"), ("T0", "address", "t0"), ("S2", "solo", "v1")]
+    )
+    materialize.write_triples(spark, _rows(spark, spec), out, n_buckets=2)
+    return out
+
+
+def _subject_rows(spark, out, subj):
+    return sorted(
+        (r.graph, r.obj)
+        for r in materialize.read_triples(spark, out).where(F.col("subj") == subj).collect()
+    )
+
+
+def test_upsert_leaves_other_graphs_of_the_bucket_untouched(spark, small_store):
+    out = small_store
+    before = _file_mtimes(out)
+    b = _bucket(spark, "S0")
+    materialize.upsert_triples(
+        spark, _rows(spark, [("S0", "building", "v2")]), out, n_buckets=2, input_snapshot="v2"
+    )
+    after = _file_mtimes(out)
+    rewritten = f"graph=building{os.sep}bucket={b}{os.sep}"
+    for p, mtime in before.items():
+        if rewritten in p:
+            assert p not in after  # the one partition holding S0 was rewritten
+        else:
+            assert after.get(p) == mtime, p
+    assert _subject_rows(spark, out, "S0") == [("building", "v2")]
+
+
+def test_upsert_of_new_subjects_rewrites_no_file(spark, small_store):
+    out = small_store
+    before = _file_mtimes(out)
+    n = materialize.read_triples(spark, out).count()
+    materialize.upsert_triples(
+        spark, _rows(spark, [("N0", "building", "n"), ("N1", "cityobject", "n")]),
+        out, n_buckets=2, input_snapshot="v2",
+    )
+    after = _file_mtimes(out)
+    assert all(after.get(p) == m for p, m in before.items())
+    assert len(after) > len(before)
+    assert materialize.read_triples(spark, out).count() == n + 2
+    removed = materialize.read_manifest(spark, out).where(
+        F.col("stage") == "upsert-delete:v2"
+    ).collect()
+    assert removed and all(r.row_count == 0 for r in removed)
+
+
+def test_upsert_drops_rows_in_graphs_the_new_version_lacks(spark, small_store):
+    out = small_store
+    materialize.upsert_triples(
+        spark, _rows(spark, [("S1", "building", "v2")]), out, n_buckets=2, input_snapshot="v2"
+    )
+    assert _subject_rows(spark, out, "S1") == [("building", "v2")]
+    assert _subject_rows(spark, out, "T0") == [("address", "t0"), ("cityobject", "v1")]
+    m = materialize.read_manifest(spark, out).where(F.col("stage") == "upsert-delete:v2")
+    assert sum(r.row_count for r in m.collect()) == 2
+
+
+def test_upsert_clears_a_partition_whose_rows_all_die(spark, small_store):
+    out = small_store
+    adapter = ParquetStoreAdapter(spark, out)
+    b = _bucket(spark, "S2")
+    assert os.path.isdir(adapter.partition_dir("solo", b))
+    materialize.upsert_triples(
+        spark, _rows(spark, [("S2", "building", "v2")]), out, n_buckets=2, input_snapshot="v2"
+    )
+    assert not os.path.exists(adapter.partition_dir("solo", b))
+    assert ("solo", b) not in {(g, bb) for g, bb, _ in adapter.list_partitions()}
+    assert _subject_rows(spark, out, "S2") == [("building", "v2")]
+
+
+def test_upsert_of_an_empty_batch_changes_nothing(spark, small_store):
+    out = small_store
+    before = _file_mtimes(out)
+    n = materialize.read_triples(spark, out).count()
+    materialize.upsert_triples(spark, _rows(spark, []), out, n_buckets=2, input_snapshot="v2")
+    assert _file_mtimes(out) == before
+    assert materialize.read_triples(spark, out).count() == n
 
 
 def test_compact_store(spark, triples, tmp_path_factory):

@@ -4,6 +4,7 @@ double-sweep BFS diameter."""
 import math
 
 import pandas as pd
+import pytest
 from pyspark.sql import Window, functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -438,6 +439,17 @@ def test_cc_shortcut_two_components(spark):
     )
     got = {r["id"]: r["component"] for r in connected_components_shortcut(e).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_cc_shortcut_raises_when_unconverged(spark):
+    from citykg.canon import connected_components_shortcut
+
+    # 5-node chain: one round cannot carry the min label "0" to node "4"
+    e = spark.createDataFrame([(str(i), str(i + 1)) for i in range(4)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in max_iter=1"):
+        connected_components_shortcut(e, max_iter=1)
+    got = {r["id"]: r["component"] for r in connected_components_shortcut(e).collect()}
+    assert got == dict.fromkeys("01234", "0")
 
 
 def test_top_paths_hand_computed(spark):
