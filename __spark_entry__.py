@@ -29,6 +29,7 @@ from citykg.fixtures import (
     SPAN_LAYOUT,
 )
 from citykg.ops import dedup, geo, graph, multimodal, owl, similarity, sketch, text
+from citykg.session import local_frame
 from citykg.vocab import DEFAULT_BASE, OCGML
 
 REHOME_BASE = "http://www.theworldavatar.com/citieskg/namespace/central/sparql"
@@ -1653,7 +1654,8 @@ def q_kg_values(spark, sf):
     table is a literal DataFrame the planner broadcasts; no scan, no
     shuffle beyond the triple read."""
     t = _triples(spark, sf, ["building"])
-    labels = spark.createDataFrame(
+    labels = local_frame(
+        spark,
         [("1", "FLAT"), ("2", "MONOPITCH"), ("3", "DUALPITCH"),
          ("4", "HIPPED"), ("5", "GABLED")],
         "code string, roof_label string",
@@ -8151,8 +8153,8 @@ def q_kg_negative_sample(spark, sf):
         .limit(256)
         .collect()
     )
-    pool = spark.createDataFrame(
-        [(i, r.pos_obj) for i, r in enumerate(pool_rows)], "idx long, neg_obj string"
+    pool = local_frame(
+        spark, [(i, r.pos_obj) for i, r in enumerate(pool_rows)], "idx long, neg_obj string"
     )
     key = "concat(subj, '#', pos_obj, '#', cast(k as string))"
     out = (

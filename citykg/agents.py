@@ -30,9 +30,11 @@ Reference parity (agents/src/main/java/uk/ac/cam/cares/twa/cities/):
   distance runs on.
 
 Scale shape: requests carry a bounded IRI list (a UI click or a tile),
-so the iris side of every join here is a broadcast-able literal frame;
-the corpus side stays a partitioned triple scan. Nothing in this module
-collects more than the request's own result rows.
+so the iris side of every join here is a broadcast-able literal frame —
+an Arrow LocalRelation (`session.local_frame`), planned as a
+LocalTableScan under the broadcast, so answering a request starts no
+Python worker; the corpus side stays a partitioned triple scan. Nothing
+in this module collects more than the request's own result rows.
 """
 
 from __future__ import annotations
@@ -46,6 +48,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import extract, materialize, sources
+from .session import local_frame
 from .vocab import DEFAULT_BASE
 
 HTTP_POST = "POST"
@@ -100,9 +103,10 @@ def _require_post_iris(request: dict) -> list[str]:
 
 
 def _iris_frame(spark: SparkSession, iris: list[str], col: str = "iri") -> DataFrame:
-    """Request-side literal frame. Requests are UI-bounded (tens of iris),
-    so this side of every join below broadcasts."""
-    return spark.createDataFrame([(i,) for i in iris], f"{col} string")
+    """Request-side literal frame, an Arrow LocalRelation: no Python
+    worker runs per request. Requests are UI-bounded (tens of iris), so
+    this side of every join below broadcasts."""
+    return local_frame(spark, [(i,) for i in iris], f"{col} string")
 
 
 def _envelope_centroids(triples: DataFrame) -> DataFrame:
@@ -347,9 +351,10 @@ class DistanceAgent:
         """All i<j pairs in request order (processRequestParameters
         :106-111). The pair list is request-bounded (C(n,2) of a UI
         selection), built driver-side by construction, not by a data
-        cartesian."""
+        cartesian, and shipped as an Arrow LocalRelation (no Python
+        worker per request)."""
         rows = [(a, b) for a, b in itertools.combinations(iris, 2)]
-        return spark.createDataFrame(rows, "iri_a string, iri_b string")
+        return local_frame(spark, rows, "iri_a string, iri_b string")
 
     @staticmethod
     def _centroids(triples: DataFrame, iris_df: DataFrame) -> DataFrame:
@@ -539,13 +544,16 @@ class CityImportAgent:
         extract triples, bulk-load the bucketed store at `target_dir`.
         Returns the servlet-shaped summary."""
         pattern = watch if watch.endswith(".gml") else os.path.join(watch, "*.gml")
-        docs = sources.read_citygml(spark, pattern)
-        n_docs = docs.count()
-        # 50-feature chunks -> fanout tasks (splitFile/CHUNK_SIZE analog)
-        fanout = max(1, -(-n_docs // self.CHUNK_SIZE))
-        docs = docs.repartition(fanout)
-        triples = extract.extract_triples(spark, docs, base=base)
-        materialize.write_triples(spark, triples, target_dir, bucket_group=None)
+        # parsed ONCE: the count fills the cache and the write reads it
+        docs = sources.read_citygml(spark, pattern).persist()
+        try:
+            n_docs = docs.count()
+            # 50-feature chunks -> fanout tasks (splitFile/CHUNK_SIZE analog)
+            fanout = max(1, -(-n_docs // self.CHUNK_SIZE))
+            triples = extract.extract_triples(spark, docs.repartition(fanout), base=base)
+            materialize.write_triples(spark, triples, target_dir, bucket_group=None)
+        finally:
+            docs.unpersist()
         return {"importedFiles": pattern, "nFeatures": n_docs, "nChunks": fanout}
 
     def process_request_parameters(self, spark: SparkSession, request: dict) -> dict:
@@ -742,8 +750,8 @@ class CityExportAgent:
         spark = triples.sparkSession
 
         want = F.broadcast(
-            spark.createDataFrame(
-                [(g, f"{ns}/cityobject/{g}/") for g in gmlids], "gml_id string, co_iri string"
+            local_frame(
+                spark, [(g, f"{ns}/cityobject/{g}/") for g in gmlids], "gml_id string, co_iri string"
             )
         )
         sg = triples.where(F.col("graph") == "surfacegeometry")
@@ -762,8 +770,8 @@ class CityExportAgent:
             return kml_placemarks(g, "gml_id", "lit").select("gml_id", "kml")
         if form == "EXTRUDED":
             bldg = F.broadcast(
-                spark.createDataFrame(
-                    [(x, f"{ns}/building/{x}/") for x in gmlids], "gml_id string, b_iri string"
+                local_frame(
+                    spark, [(x, f"{ns}/building/{x}/") for x in gmlids], "gml_id string, b_iri string"
                 )
             )
             h = (
@@ -1010,8 +1018,8 @@ def dispatch(
         agent = UPRNAgent()
         agent.validate_input(request)
         pts = request.get("points") or []
-        points = spark.createDataFrame(
-            [(str(p["point_id"]), float(p["x"]), float(p["y"])) for p in pts],
+        points = local_frame(
+            spark, [(str(p["point_id"]), float(p["x"]), float(p["y"])) for p in pts],
             "point_id string, x double, y double",
         )
         out = dict(request)

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import local_frame
 from .vocab import BASE_URL_LITERALS, CLASS_ID, DEFAULT_BASE, template_rows
 
 # graphs whose subject is a minted (deterministic) id, not a feature gmlId —
@@ -76,8 +77,8 @@ def _template_df(spark: SparkSession) -> DataFrame:
             rows.append(
                 (kind, graph, pos, pred, btype, key, refgraph, obj_type, CLASS_ID.get(kind))
             )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "kind string, graph string, pos int, pred string, btype string, "
         "key string, refgraph string, obj_type string, class_id int",
     )

@@ -25,7 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schema import MANIFEST_SCHEMA
-from .session import stable
+from .session import local_frame, stable
 
 DEFAULT_BUCKETS = 64
 
@@ -45,7 +45,7 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     if not os.path.exists(p) or not any(
         f.endswith(".parquet") for f in os.listdir(p)
     ):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
 
 
@@ -58,7 +58,7 @@ def completed_buckets(spark: SparkSession, out_dir: str, stage: str) -> set[int]
 
 
 def _append_manifest(spark: SparkSession, out_dir: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
+    local_frame(spark, rows, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
         manifest_path(out_dir)
     )
 
@@ -251,7 +251,7 @@ def delete_subjects(
     clears partitions that become empty.)
     """
     subj_b = with_bucket(
-        spark.createDataFrame([(s,) for s in subjects], "subj string"), n_buckets
+        local_frame(spark, [(s,) for s in subjects], "subj string"), n_buckets
     )
     buckets = sorted(int(r.bucket) for r in subj_b.select("bucket").distinct().collect())
     if not buckets:

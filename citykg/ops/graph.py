@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..session import stable
+from ..session import local_frame, stable
 
 
 def triples_to_edges(triples: DataFrame) -> DataFrame:
@@ -154,7 +154,7 @@ def edge_betweenness(
     if sources is None:
         srcs = sym.select(F.col("src").alias("s")).distinct()
     else:
-        srcs = spark.createDataFrame([(s,) for s in sources], "s string")
+        srcs = local_frame(spark, [(s,) for s in sources], "s string")
 
     # forward BFS with shortest-path counting: visited(s, v, dist, sigma)
     frontier = srcs.select(
@@ -216,7 +216,7 @@ def edge_betweenness(
         )
 
     if not per_level:
-        return spark.createDataFrame([], "src string, dst string, betweenness double")
+        return local_frame(spark, [], "src string, dst string, betweenness double")
     acc = per_level[0]
     for p in per_level[1:]:
         acc = acc.union(p)
@@ -307,7 +307,7 @@ def shortest_paths(edges: DataFrame, source: str, max_hops: int = 15) -> DataFra
         .transform(stable)
     )
     spark = edges.sparkSession
-    frontier = spark.createDataFrame([(source, 0)], "id string, dist int")
+    frontier = local_frame(spark, [(source, 0)], "id string, dist int")
     visited = frontier
 
     for hop in range(1, max_hops + 1):
@@ -1017,8 +1017,8 @@ def sssp_weighted(
     the frontier, so per-round work tracks the reached set.
     """
     e = edges.select("src", "dst", F.col("w").cast("double")).transform(stable)
-    dist = e.sparkSession.createDataFrame(
-        [(source, 0.0)], "id string, dist double"
+    dist = local_frame(
+        e.sparkSession, [(source, 0.0)], "id string, dist double"
     )
     for _ in range(max_rounds):
         relaxed = (

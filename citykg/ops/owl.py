@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import local_frame
+
 CLASS_PRED = "ocgml:objectClassId"
 
 # 3DCityDB object-class taxonomy: (class_id, class_name, superclass_id).
@@ -62,8 +64,8 @@ OBJECTCLASS = [
 
 
 def objectclass_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        OBJECTCLASS, "class_id int, class_name string, superclass_id int"
+    return local_frame(
+        spark, OBJECTCLASS, "class_id int, class_name string, superclass_id int"
     )
 
 
@@ -87,7 +89,7 @@ def subclass_closure(spark: SparkSession) -> DataFrame:
         while anc is not None:
             rows.append((sub, anc, depth))
             anc, depth = parent.get(anc), depth + 1
-    return spark.createDataFrame(rows, "sub_id int, super_id int, depth int")
+    return local_frame(spark, rows, "sub_id int, super_id int, depth int")
 
 
 def class_membership(spark: SparkSession, triples: DataFrame) -> DataFrame:
@@ -138,7 +140,7 @@ def range_check_summary(
     sit in the expected graph (its '/<graph>/' path segment). Returns a
     per-axiom summary (pred, expected_graph, n_checked, n_violations) —
     one broadcast join + one partial aggregate."""
-    axioms = spark.createDataFrame(ranges, "pred string, expected_graph string")
+    axioms = local_frame(spark, ranges, "pred string, expected_graph string")
     checked = triples.where(F.col("obj_type") == "iri").join(broadcast(axioms), "pred")
     ok = F.col("obj").contains(F.concat(F.lit("/"), F.col("expected_graph"), F.lit("/")))
     return (
@@ -157,8 +159,8 @@ def value_restriction_violations(
     """ValueRestrictionCheckingTask analog for numeric literal ranges:
     axioms (graph, pred, lo, hi); report triples whose literal value falls
     outside [lo, hi]. Broadcast axiom join, scan-side filter."""
-    axioms = spark.createDataFrame(
-        restrictions, "graph string, pred string, lo double, hi double"
+    axioms = local_frame(
+        spark, restrictions, "graph string, pred string, lo double, hi double"
     )
     # try_cast, not cast: malformed literals must FLOW INTO the violation
     # branch (v.isNull()); under ANSI mode a plain cast would error the job
@@ -220,7 +222,7 @@ def cardinality_violations(
     (graph, subj, pred) set — the anti-join shuffles on (graph, subj,
     pred), which is near-unique, so no skew.
     """
-    axioms = spark.createDataFrame(required, "graph string, required_pred string")
+    axioms = local_frame(spark, required, "graph string, required_pred string")
     subjects = triples.select("graph", "subj").distinct()
     expected = subjects.join(broadcast(axioms), "graph")
     observed = triples.select(
@@ -239,7 +241,7 @@ def disjoint_class_violations(
     (subj, class) projection on subj — class triples are one per subject,
     so the join key is near-unique (no skew); the disjoint axiom table is
     broadcast."""
-    axioms = spark.createDataFrame(disjoint_pairs, "class_a string, class_b string")
+    axioms = local_frame(spark, disjoint_pairs, "class_a string, class_b string")
     cls = triples.where(F.col("pred") == CLASS_PRED).select("subj", F.col("obj").alias("cls"))
     a = cls.withColumnRenamed("cls", "class_a")
     b = cls.withColumnRenamed("cls", "class_b")
@@ -256,7 +258,7 @@ def domain_violations(
     """rdfs:domain check (PropertyCheckingTask analog): triples whose
     predicate is declared for a different graph/class than the one the
     subject sits in. Broadcast join on pred, filter graph mismatch."""
-    axioms = spark.createDataFrame(domains, "pred string, expected_graph string")
+    axioms = local_frame(spark, domains, "pred string, expected_graph string")
     return (
         triples.join(broadcast(axioms), "pred")
         .where(F.col("graph") != F.col("expected_graph"))
@@ -327,8 +329,8 @@ def shacl_report(
     Output: (pred, min_count, max_count, node_kind, n_subjects,
     n_min_violations, n_max_violations, n_kind_violations, n_conforming).
     """
-    sh = spark.createDataFrame(
-        shapes, "pred string, min_count int, max_count int, node_kind string"
+    sh = local_frame(
+        spark, shapes, "pred string, min_count int, max_count int, node_kind string"
     )
     t = triples.where(F.col("graph") == graph)
     per_sp = (

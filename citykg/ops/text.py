@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 # minimal per-language stopword lists for the n-gram/stopword-ratio
 # language heuristic (languages match the testdata lang column domain)
 STOPWORDS = {
@@ -511,8 +513,8 @@ def bpe_merges(df: DataFrame, text_col: str = "text", n_merges: int = 6) -> Data
             f"ELSE concat(acc, array(x)) END)"
         )
         wf = wf.select(F.expr(fold).alias("toks"), "cnt").localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "rank int, l_sym string, r_sym string, merged string, pair_cnt long"
+    return local_frame(
+        spark, merges, "rank int, l_sym string, r_sym string, merged string, pair_cnt long"
     )
 
 
@@ -592,8 +594,8 @@ def bpe_train_batched(
             # folds run together inside the next round's pair-count job
             wf = wf.select(F.expr(fold).alias("toks"), "cnt")
         wf = wf.localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "rank int, l_sym string, r_sym string, merged string, pair_cnt long"
+    return local_frame(
+        spark, merges, "rank int, l_sym string, r_sym string, merged string, pair_cnt long"
     )
 
 
@@ -917,7 +919,7 @@ def blocklist_hits(
         F.expr(f"size({toks})").alias("_n_tokens"),
         F.explode_outer(F.expr(toks)).alias("tok"),
     )
-    bl = spark.createDataFrame([(t, 1) for t in terms], ["tok", "_hit"])
+    bl = local_frame(spark, [(t, 1) for t in terms], "tok string, _hit long")
     return (
         tok.join(F.broadcast(bl), "tok", "left")
         .groupBy(id_col)

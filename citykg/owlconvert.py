@@ -21,6 +21,8 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
 OWL_NS = "http://www.w3.org/2002/07/owl#"
@@ -92,8 +94,8 @@ def read_owl_tbox(spark: SparkSession, path: str, graph: str = "tbox") -> DataFr
     the broadcast side of all downstream checks)."""
     with open(path, encoding="utf-8") as f:
         rows = parse_rdfxml(f.read())
-    return spark.createDataFrame(
-        [(s, p, o, t, d, graph) for s, p, o, t, d in rows],
+    return local_frame(
+        spark, [(s, p, o, t, d, graph) for s, p, o, t, d in rows],
         "subj string, pred string, obj string, obj_type string, datatype string, graph string",
     )
 

@@ -10,13 +10,19 @@ cluster reading 100 TB; values here are sized for local[N] testing):
   ~2-3x total cores or left to AQE's coalescing.
 * Arrow enabled for the few pandas-UDF paths (geometry tree walks,
   simhash bit-fold) — everything else stays JVM-side.
+* Driver-built tables (agent requests, the extract template, manifest
+  rows) go through `local_frame`: one Arrow batch planned as a
+  LocalRelation, never a pickled Python RDD that starts Python workers.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -85,3 +91,29 @@ def stable(df, eager: bool = True):
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A driver-side table of `rows` (tuples in `schema` field order) as
+    an Arrow-backed LocalRelation: one Arrow batch handed to the JVM, so
+    scanning it is a `LocalTableScan` with no Python worker and no
+    pickling per job (`createDataFrame` over a Python list plans a pickled
+    Python RDD instead, and every job reading it unpickles the rows in
+    Python).
+
+    `schema` is a DDL string or a StructType; its nullability survives,
+    zero rows give an empty frame of that schema, and a value that does
+    not fit its column type raises instead of being coerced."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    if len(cols) != len(arrow_schema):
+        raise ValueError(f"rows have {len(cols)} fields, schema has {len(arrow_schema)}")
+    arrays = []
+    for col, field in zip(cols, arrow_schema):
+        # Arrow truncates a float into an integer column; refuse instead
+        if pa.types.is_integer(field.type) and any(isinstance(v, float) for v in col):
+            raise TypeError(f"field {field.name}: float value in {field.type} column")
+        arrays.append(pa.array(col, type=field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import local_frame
+
 
 def affine_transform_literal(
     df: DataFrame,
@@ -98,6 +100,6 @@ def upsert_srs(spark: SparkSession, out_dir: str, srid: int, srs_name: str, base
     ]
     from .schema import TRIPLE_SCHEMA
 
-    spark.createDataFrame(rows, TRIPLE_SCHEMA).coalesce(1).write.mode("overwrite").parquet(
+    local_frame(spark, rows, TRIPLE_SCHEMA).coalesce(1).write.mode("overwrite").parquet(
         f"{out_dir}/databasesrs"
     )

@@ -5,6 +5,7 @@ Contracts under test mirror CityInformationAgent.java:92-254,
 DistanceAgent.java:87-149/271-316, CityImportAgent.java:72-200."""
 
 import json
+import pathlib
 import urllib.request
 
 import pytest
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 from citykg import materialize
 from citykg.agents import (
     BadRequestException,
+    CityExportAgent,
     CityImportAgent,
     CityInformationAgent,
     DistanceAgent,
@@ -269,6 +271,29 @@ def test_import_listen_stream_resumes(spark, tmp_path):
     q = agent.listen_stream(spark, str(watch), str(out), str(ckpt))
     q.awaitTermination(300)
     assert spark.read.parquet(str(out)).count() == 2 * first
+
+
+def test_import_files_counts_and_releases_its_cache(spark, tmp_path, monkeypatch):
+    """A generated CityGML 2.0 tile set through the import action: the
+    feature count and every graph's row count match the vocabulary
+    templates, and the parse cached across the count and the write is
+    released when the call returns."""
+    monkeypatch.syspath_prepend(str(pathlib.Path(__file__).resolve().parents[1] / "perfbench"))
+    from citygml_gen import CityGMLSet
+    from templates import graph_counts
+
+    gen = CityGMLSet(seed=3, n_buildings=4)
+    gen.write(str(tmp_path / "tiles"))
+    store = str(tmp_path / "store")
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    out = CityImportAgent().import_files(spark, str(tmp_path / "tiles"), store)
+
+    assert out["nFeatures"] == len(gen.features)
+    assert out["nChunks"] == 1
+    stored = materialize.read_triples(spark, store).groupBy("graph").count().collect()
+    assert {r["graph"]: r["count"] for r in stored} == graph_counts(gen.spans())
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
 
 
 # ---------------------------------------------------------------------------
@@ -591,6 +616,37 @@ def test_store_registry_sees_upserts(spark, tmp_path):
     assert names() == ["v1_1"]
     materialize.upsert_triples(spark, rows("v2_"), store, n_buckets=2, input_snapshot="v2")
     assert names() == ["v2_1"]
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_request_plans_read_no_python_rdd(spark):
+    """Request tables are Arrow LocalRelations: no agent plan scans a
+    pickled Python RDD (`LogicalRDD`), so answering a request starts no
+    Python worker. The triples are an unmaterialized extract plan —
+    a checkpointed frame would itself plan as a LogicalRDD."""
+    t = extract_triples(spark, synth_docs(spark, SF))
+    iris = [_iri(1), _iri(2), _iri(5)]
+    info, dist = CityInformationAgent(), DistanceAgent()
+    export = {"method": "POST", "namespace": DEFAULT_BASE, "gmlid": ["BLDG_00000003"], "lod": 2}
+    plans = {
+        "info_frame": info.info_frame(t, {"method": "POST", "iris": iris}),
+        "distance_filter_frame": info.distance_filter_frame(
+            t, {"method": "POST", "iris": iris, "searchDistance": 5}
+        ),
+        "distances_frame": dist.distances_frame(t, {"method": "POST", "iris": iris}),
+        **{
+            f"export_frame[{form}]": CityExportAgent().export_frame(
+                t, {**export, "displayform": form}
+            )
+            for form in CityExportAgent.DISPLAY_FORMS
+        },
+    }
+    bad = [name for name, df in plans.items() if "LogicalRDD" in _optimized_plan(df)]
+    assert not bad, f"plans scanning a Python RDD: {bad}"
+    assert "LocalRelation" in _optimized_plan(plans["info_frame"])
 
 
 def test_dispatch_unknown_route(spark, triples):

@@ -1,6 +1,7 @@
 """Stage-1 extraction: DuckDB-oracle equality, span-order invariant,
-hostile inputs, and the no-per-row-Python guard."""
+hostile inputs, and the no-per-row-Python guards."""
 
+import ast
 import pathlib
 import re
 
@@ -91,6 +92,35 @@ def test_no_per_row_python_udf_in_package():
             if re.search(r"\bF\.udf\b|\bfrom pyspark\.sql\.functions import udf\b", src):
                 bad.append(py.name)
     assert not bad, f"row-at-a-time UDFs found in {bad}"
+
+
+def test_driver_tables_built_only_by_local_frame():
+    """`createDataFrame(` appears in the package only inside
+    session.local_frame, the one builder of driver-side tables."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "citykg"
+    hits = [
+        (py.relative_to(pkg).as_posix(), n)
+        for py in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    fn = next(
+        f for f in ast.parse((pkg / "session.py").read_text()).body
+        if isinstance(f, ast.FunctionDef) and f.name == "local_frame"
+    )
+    assert hits and all(
+        p == "session.py" and fn.lineno <= n <= fn.end_lineno for p, n in hits
+    ), hits
+
+
+def test_template_is_a_local_relation(spark):
+    """The template side of the extract join is an Arrow LocalRelation,
+    not a pickled Python RDD: the optimized plan holds no `LogicalRDD`,
+    so an extract starts no Python worker for its template."""
+    t = extract_triples(spark, synth_docs(spark, SF_SMOKE))
+    plan = t._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
 
 
 def test_plan_is_single_broadcast_join_no_shuffle(spark):
