@@ -10,10 +10,16 @@ to `df.writeTo(tbl).append()` on a real cluster.
 
 Resumability (north_rule): work is unit-ized by bucket. Each completed
 bucket appends one manifest row (MANIFEST_SCHEMA: stage, partition_range,
-row_count, status, attempt, wall_ms). `pending_buckets` anti-joins the
+row_count, status, attempt, wall_ms). `completed_buckets` reads the
 manifest so a re-run recomputes ONLY missing buckets — the reference's
 chunk-wise agent pipeline (CityImportAgent.importChunk) with Spark tasks
 instead of subprocess chains.
+
+Store metadata stays on the driver, as Iceberg's does: the manifest is
+written and read with pyarrow (`_append_manifest`, `_manifest_rows`) and
+store reads discover partitions on the driver (store.ParquetStoreAdapter
+.read), so opening, upserting and compacting the store start no Spark
+job per partition and none per manifest row.
 """
 
 from __future__ import annotations
@@ -21,11 +27,16 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
+from collections import namedtuple
 
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schema import MANIFEST_SCHEMA
-from .session import local_frame, stable
+from .session import arrow_table, local_frame, stable
 
 DEFAULT_BUCKETS = 64
 
@@ -40,27 +51,51 @@ def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+ManifestRow = namedtuple("ManifestRow", MANIFEST_SCHEMA.fieldNames())
+
+
+def _manifest_rows(out_dir: str) -> list[ManifestRow]:
+    """Every manifest row of the store, read with pyarrow on the driver
+    (no Spark job). Reads each `*.parquet` file under MANIFEST_SCHEMA, so
+    files Spark wrote into `_manifest` (older stores) read beside
+    driver-written ones; the `.<uuid>.tmp` file of an unfinished append
+    is skipped, as Spark and DuckDB's `*.parquet` glob skip it."""
     p = manifest_path(out_dir)
-    if not os.path.exists(p) or not any(
-        f.endswith(".parquet") for f in os.listdir(p)
-    ):
-        return local_frame(spark, [], MANIFEST_SCHEMA)
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
+    if not os.path.isdir(p):
+        return []
+    files = [os.path.join(p, f) for f in sorted(os.listdir(p)) if f.endswith(".parquet")]
+    table = pads.dataset(
+        files, schema=to_arrow_schema(MANIFEST_SCHEMA), format="parquet"
+    ).to_table()
+    return [ManifestRow(*r) for r in zip(*(c.to_pylist() for c in table.columns))]
+
+
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The lineage manifest as a DataFrame: the driver-read rows as one
+    LocalRelation (empty, with MANIFEST_SCHEMA, for a store without one)."""
+    return local_frame(spark, _manifest_rows(out_dir), MANIFEST_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, out_dir: str, stage: str) -> set[int]:
-    m = read_manifest(spark, out_dir)
-    rows = m.where((F.col("stage") == stage) & (F.col("status") == "done")).select(
-        "partition_range"
-    ).collect()
-    return {int(r.partition_range) for r in rows}
+    return {
+        int(r.partition_range)
+        for r in _manifest_rows(out_dir)
+        if r.stage == stage and r.status == "done"
+    }
 
 
-def _append_manifest(spark: SparkSession, out_dir: str, rows: list[tuple]) -> None:
-    local_frame(spark, rows, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
-        manifest_path(out_dir)
-    )
+def _append_manifest(out_dir: str, rows: list[tuple]) -> None:
+    """Commit `rows` (MANIFEST_SCHEMA tuples) as one new manifest file,
+    written by pyarrow on the driver (no Spark job): the file is written
+    under a dot-prefixed temp name that every reader skips, then made
+    visible by one atomic rename — a crash leaves either no new rows or
+    all of them (Iceberg: the driver-side manifest-list commit)."""
+    p = manifest_path(out_dir)
+    os.makedirs(p, exist_ok=True)
+    name = uuid.uuid4().hex
+    tmp = os.path.join(p, f".{name}.tmp")
+    pq.write_table(arrow_table(rows, MANIFEST_SCHEMA), tmp)
+    os.rename(tmp, os.path.join(p, f"part-{name}.parquet"))
 
 
 def _adapter(spark: SparkSession, out_dir: str):
@@ -128,7 +163,6 @@ def write_triples(
             counts[b] = counts.get(b, 0) + sum(adapter.file_counts(g, b).values())
         wall = int((time.time() - t0) * 1000)
         _append_manifest(
-            spark,
             out_dir,
             [(stage, str(b), input_snapshot, counts.get(b, 0), "done", 1, wall)
              for b in range(n_buckets)],
@@ -156,7 +190,6 @@ def write_triples(
             wall = int((time.time() - t0) * 1000)
             attempt = 1
             _append_manifest(
-                spark,
                 out_dir,
                 [
                     (stage, str(b), input_snapshot, counts.get(b, 0), "done", attempt, wall)
@@ -224,7 +257,7 @@ def upsert_triples(
     wall = int((time.time() - t0) * 1000)
     rows += [(f"upsert:{input_snapshot}", str(b), input_snapshot, n, "done", 1, wall)
              for b, n in sorted(counts.items())]
-    _append_manifest(spark, out_dir, rows)
+    _append_manifest(out_dir, rows)
 
 
 def delete_subjects(
@@ -260,7 +293,7 @@ def delete_subjects(
         spark, out_dir, subj_b, buckets, drop_references=drop_references
     )
     _append_manifest(
-        spark, out_dir,
+        out_dir,
         [(stage, str(b), "", n, "done", 1, 0) for b, n in sorted(removed.items())],
     )
     return sum(removed.values())
@@ -406,7 +439,7 @@ def compact_store(
     test.) Returns the compacted (graph/bucket, n_files) list."""
     path = os.path.join(out_dir, "triples")
     adapter = _adapter(spark, out_dir)
-    forced = _audit_pending_compactions(spark, out_dir, stage, path)
+    forced = _audit_pending_compactions(out_dir, stage, path)
     todo: list[tuple[str, int, int]] = [
         (g, b, n)
         for g, b, n in adapter.list_partitions()
@@ -440,7 +473,6 @@ def compact_store(
             for r in part.groupBy("graph", "bucket").agg(F.count("*").alias("cnt")).collect()
         }
         _append_manifest(
-            spark,
             out_dir,
             [(stage, f"{g}/{b}", "", expected.get((g, b), 0), "pending", 1, 0)
              for g, b, _ in grp],
@@ -455,7 +487,6 @@ def compact_store(
                 )
         wall = int((time.time() - t0) * 1000)
         _append_manifest(
-            spark,
             out_dir,
             [(stage, f"{g}/{b}", "", expected.get((g, b), 0), "done", 1, wall)
              for g, b, _ in grp],
@@ -468,8 +499,6 @@ def _parquet_footer_counts(part_dir: str) -> dict[str, int]:
     """Per-file row counts from parquet FOOTER metadata — a pure
     metadata read (no column data is scanned), the emulation analog of
     Iceberg's per-data-file record_count manifest field."""
-    import pyarrow.parquet as pq
-
     out: dict[str, int] = {}
     if not os.path.isdir(part_dir):
         return out
@@ -479,9 +508,7 @@ def _parquet_footer_counts(part_dir: str) -> dict[str, int]:
     return out
 
 
-def _audit_pending_compactions(
-    spark: SparkSession, out_dir: str, stage: str, path: str
-) -> set[tuple[str, int]]:
+def _audit_pending_compactions(out_dir: str, stage: str, path: str) -> set[tuple[str, int]]:
     """Resume-time audit of compaction groups that appended `pending`
     but never reached `done` (crash inside or just after the overwrite
     commit). Per outstanding partition, decide from physical state +
@@ -505,10 +532,7 @@ def _audit_pending_compactions(
     append-order-independent: every cycle contributes one pending and
     one closure (`failed` closes a crashed-pre-commit pending whose
     partition is simply re-queued)."""
-    m = read_manifest(spark, out_dir)
-    rows = m.where(F.col("stage") == stage).select(
-        "partition_range", "status", "row_count"
-    ).collect()
+    rows = [r for r in _manifest_rows(out_dir) if r.stage == stage]
     n_pending: dict[str, int] = {}
     n_done: dict[str, int] = {}
     exp: dict[str, set] = {}
@@ -558,7 +582,7 @@ def _audit_pending_compactions(
                 f"before compacting again"
             )
     if closures:
-        _append_manifest(spark, out_dir, closures)
+        _append_manifest(out_dir, closures)
     return forced
 
 

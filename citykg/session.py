@@ -11,8 +11,10 @@ cluster reading 100 TB; values here are sized for local[N] testing):
 * Arrow enabled for the few pandas-UDF paths (geometry tree walks,
   simhash bit-fold) — everything else stays JVM-side.
 * Driver-built tables (agent requests, the extract template, manifest
-  rows) go through `local_frame`: one Arrow batch planned as a
+  frames) go through `local_frame`: one Arrow batch planned as a
   LocalRelation, never a pickled Python RDD that starts Python workers.
+  Its typed conversion, `arrow_table`, also builds the manifest files
+  materialize.py writes with pyarrow on the driver.
 """
 
 from __future__ import annotations
@@ -93,17 +95,15 @@ def stable(df, eager: bool = True):
     return df.localCheckpoint(eager=eager)
 
 
-def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
-    """A driver-side table of `rows` (tuples in `schema` field order) as
-    an Arrow-backed LocalRelation: one Arrow batch handed to the JVM, so
-    scanning it is a `LocalTableScan` with no Python worker and no
-    pickling per job (`createDataFrame` over a Python list plans a pickled
-    Python RDD instead, and every job reading it unpickles the rows in
-    Python).
+def arrow_table(rows, schema: str | StructType) -> pa.Table:
+    """`rows` (tuples in `schema` field order) as one `pyarrow.Table`
+    typed by `schema`'s Arrow mapping — the shared conversion behind
+    `local_frame` and the driver-written store manifest.
 
-    `schema` is a DDL string or a StructType; its nullability survives,
-    zero rows give an empty frame of that schema, and a value that does
-    not fit its column type raises instead of being coerced."""
+    `schema` is a DDL string or a StructType. Zero rows give an empty
+    table; a row width that differs from the schema, a null in a
+    non-nullable field, or a value that does not fit its column type
+    raises instead of being coerced."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
@@ -115,5 +115,24 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
         # Arrow truncates a float into an integer column; refuse instead
         if pa.types.is_integer(field.type) and any(isinstance(v, float) for v in col):
             raise TypeError(f"field {field.name}: float value in {field.type} column")
-        arrays.append(pa.array(col, type=field.type))
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+        arr = pa.array(col, type=field.type)
+        # Arrow keeps a null in a non-nullable field; refuse instead
+        if not field.nullable and arr.null_count:
+            raise ValueError(f"field {field.name}: null in a non-nullable column")
+        arrays.append(arr)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A driver-side table of `rows` (tuples in `schema` field order) as
+    an Arrow-backed LocalRelation: one Arrow batch handed to the JVM, so
+    scanning it is a `LocalTableScan` with no Python worker and no
+    pickling per job (`createDataFrame` over a Python list plans a pickled
+    Python RDD instead, and every job reading it unpickles the rows in
+    Python).
+
+    `schema` is a DDL string or a StructType; its nullability survives,
+    and `arrow_table` does the typed, strict conversion."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

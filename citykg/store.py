@@ -16,9 +16,12 @@ Mapping table (parquet emulation -> Iceberg):
 |-------------------------|--------------------------------------------|-----------------------------------------------|
 | append(df)              | write.mode('append').partitionBy(g, b)     | df.writeTo(tbl).append()                      |
 | overwrite_partitions(df)| dynamic partitionOverwriteMode + overwrite | df.writeTo(tbl).overwritePartitions()         |
-| read()                  | spark.read.parquet(root/triples)           | spark.table(tbl)                              |
+| read()                  | spark.read.parquet(root/triples),          | spark.table(tbl)                              |
+|                         | partition discovery on the driver          |                                               |
 | list_partitions()       | driver-side directory listing              | SELECT ... FROM tbl.partitions (metadata)     |
 | file_counts(graph, b)   | parquet FOOTER num_rows per file           | tbl.files metadata table (record_count)       |
+| manifest append / read  | pyarrow write + atomic rename on the       | driver-side snapshot / manifest-list commit   |
+| (materialize.py)        | driver; pyarrow read of `_manifest`        |                                               |
 
 The emulation's upsert (materialize.upsert_triples) is a DELETE on the
 touched (graph, bucket) partitions — overwrite_partitions of their
@@ -79,6 +82,14 @@ class ParquetStoreAdapter:
 
     # -- reads ----------------------------------------------------------
     def read(self) -> DataFrame:
+        """The whole table, partitions discovered on the driver: above
+        Spark's default threshold (32 subdirectories under one parent —
+        every 64-bucket graph) the listing would otherwise run as a Spark
+        job with one task per subdirectory, on every store open (Iceberg
+        plans from manifests on the driver as well)."""
+        self.spark.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
         return self.spark.read.parquet(self.path)
 
     def exists(self) -> bool:

@@ -236,17 +236,12 @@ def upsert_epoch(
     stream_upsert_store, public so replay semantics are directly
     testable). Returns True if the batch was applied, False if it was
     skipped as already-committed (replay) or empty."""
-    from pyspark.sql import functions as F
-
     from . import materialize as mat
 
     stage = f"upsert:epoch-{int(epoch_id)}"
     sp = batch_df.sparkSession
-    committed = (
-        mat.read_manifest(sp, out_dir)
-        .where((F.col("stage") == stage) & (F.col("status") == "done"))
-        .limit(1)
-        .count()
+    committed = any(
+        r.stage == stage and r.status == "done" for r in mat._manifest_rows(out_dir)
     )
     if committed or batch_df.isEmpty():
         return False

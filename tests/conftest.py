@@ -1,4 +1,5 @@
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -9,6 +10,27 @@ from citykg.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def spark_jobs(spark, fn):
+    """Run `fn()` under a fresh job group and return (its result, the
+    jobs it launched, their tasks), read from the status tracker once the
+    listener bus has delivered every event (an undelivered job would
+    count as none)."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    tasks = sum(
+        st.getStageInfo(s).numTasks for j in jobs for s in st.getJobInfo(j).stageIds
+    )
+    return result, len(jobs), tasks
 
 
 @pytest.fixture(scope="session")

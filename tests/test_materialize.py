@@ -463,7 +463,7 @@ def test_compact_store_mid_commit_crash(spark, triples, tmp_path_factory):
     newf = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     shutil.copy(os.path.join(tmp, newf), os.path.join(part_dir, "part-99999-repair.parquet"))
     materialize._append_manifest(
-        spark, out, [("compact", f"{g}/{b}", "", expected, "pending", 1, 0)]
+        out, [("compact", f"{g}/{b}", "", expected, "pending", 1, 0)]
     )
     assert spark.read.parquet(part_dir).count() > expected  # duplicates live
 
@@ -479,7 +479,7 @@ def test_compact_store_mid_commit_crash(spark, triples, tmp_path_factory):
 
     # row-LOSS state: delete the only file, leave a dangling pending
     materialize._append_manifest(
-        spark, out, [("compact", f"{g}/{b}", "", expected, "pending", 3, 0)]
+        out, [("compact", f"{g}/{b}", "", expected, "pending", 3, 0)]
     )
     os.remove(os.path.join(part_dir, next(iter(
         materialize._parquet_footer_counts(part_dir)
@@ -522,3 +522,108 @@ def test_write_triples_bulk_single_pass(spark, triples, tmp_path_factory):
         materialize.write_triples(
             spark, triples, partial, n_buckets=8, bucket_group=None
         )
+
+
+_MANIFEST_ROWS = [
+    ("materialize", "3", "v1", 7, "done", 1, 12),
+    ("compact", "building/3", "", 9, "pending", 1, 0),
+]
+
+
+def test_manifest_io_starts_no_spark_job(spark, tmp_path):
+    """The manifest is written and read with pyarrow on the driver: an
+    append, a completed-bucket lookup and building the manifest frame
+    launch no Spark job."""
+    from conftest import spark_jobs
+
+    out = str(tmp_path)
+
+    def manifest_io():
+        materialize._append_manifest(out, _MANIFEST_ROWS)
+        return (materialize.completed_buckets(spark, out, "materialize"),
+                materialize.read_manifest(spark, out))
+
+    (done, frame), jobs, _ = spark_jobs(spark, manifest_io)
+    assert jobs == 0
+    assert done == {3}
+    assert sorted(map(tuple, frame.collect())) == sorted(_MANIFEST_ROWS)
+
+
+def test_manifest_ignores_an_unrenamed_temp_file(spark, tmp_path):
+    """An append that died between its write and its rename leaves a
+    dot-prefixed temp file; no reader sees its rows — not the manifest
+    frame, not completed_buckets, not DuckDB's `*.parquet` glob."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from citykg.schema import MANIFEST_SCHEMA
+    from citykg.session import arrow_table
+
+    out = str(tmp_path)
+    materialize._append_manifest(out, _MANIFEST_ROWS[:1])
+    pq.write_table(
+        arrow_table([("materialize", "5", "", 1, "done", 1, 0)], MANIFEST_SCHEMA),
+        os.path.join(materialize.manifest_path(out), ".x.tmp"),
+    )
+    assert [tuple(r) for r in materialize.read_manifest(spark, out).collect()] == [
+        _MANIFEST_ROWS[0]
+    ]
+    assert materialize.completed_buckets(spark, out, "materialize") == {3}
+    con = duckdb.connect()
+    try:
+        seen = con.execute(
+            f"SELECT DISTINCT partition_range FROM read_parquet('{out}/_manifest/*.parquet')"
+        ).fetchall()
+    finally:
+        con.close()
+    assert seen == [("3",)]
+
+
+def test_spark_written_manifest_reads_beside_driver_written(spark, tmp_path):
+    """A store whose manifest files Spark wrote (the earlier writer) keeps
+    reading: its rows come back next to driver-written ones, all of them,
+    with MANIFEST_SCHEMA's types."""
+    from citykg.schema import MANIFEST_SCHEMA
+    from citykg.session import local_frame
+
+    out = str(tmp_path)
+    old = [
+        ("materialize", "0", "v0", 5, "done", 1, 40),
+        ("upsert:v0", "0", None, None, "done", None, None),
+    ]
+    local_frame(spark, old, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
+        materialize.manifest_path(out)
+    )
+    materialize._append_manifest(out, _MANIFEST_ROWS)
+    m = materialize.read_manifest(spark, out)
+    assert m.schema == MANIFEST_SCHEMA
+    assert sorted(map(tuple, m.collect()), key=repr) == sorted(old + _MANIFEST_ROWS, key=repr)
+    assert materialize.completed_buckets(spark, out, "materialize") == {0, 3}
+    row = next(r for r in materialize._manifest_rows(out) if r.partition_range == "0"
+               and r.stage == "materialize")
+    assert [type(v) for v in row] == [str, str, str, int, str, int, int]
+
+
+def test_manifest_zero_rows_and_strict_rows(spark, tmp_path):
+    """Zero rows and MANIFEST_SCHEMA's non-nullable fields behave as in
+    session.local_frame: an empty append reads back as an empty frame of
+    the schema; a null stage, a float count or a short row raises and
+    leaves no file behind."""
+    from citykg.schema import MANIFEST_SCHEMA
+
+    out = str(tmp_path)
+    assert materialize.read_manifest(spark, out).schema == MANIFEST_SCHEMA
+    materialize._append_manifest(out, [])
+    m = materialize.read_manifest(spark, out)
+    assert m.schema == MANIFEST_SCHEMA and m.count() == 0
+    assert [f.name for f in m.schema if not f.nullable] == ["stage", "partition_range"]
+    files = sorted(os.listdir(materialize.manifest_path(out)))
+    for bad in (
+        [(None, "3", "", 7, "done", 1, 0)],
+        [("materialize", "3", "", 7.0, "done", 1, 0)],
+        [("materialize", "3", "", 7, "done", 1)],
+    ):
+        with pytest.raises((TypeError, ValueError)):
+            materialize._append_manifest(out, bad)
+    assert sorted(os.listdir(materialize.manifest_path(out))) == files
+    assert materialize.completed_buckets(spark, out, "materialize") == set()

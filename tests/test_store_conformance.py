@@ -132,3 +132,42 @@ def test_commit_protocol_brackets_every_compaction(spark, tmp_path_factory):
     for pr, cnt in done:
         g, b = pr.split("/", 1)
         assert sum(adapter.file_counts(g, int(b)).values()) == cnt
+
+
+def test_store_open_lists_partitions_on_the_driver(spark, tmp_path_factory):
+    """Opening a 64-bucket store (more than 32 partition directories
+    under one parent, where Spark would list them with a job of one task
+    per directory) launches no listing job: `read_triples` and a registry
+    resolve each start at most the one-task footer-schema job, and a
+    (graph, bucket)-filtered count still equals that partition's footers."""
+    from citykg.agents import StoreRegistry
+    from citykg.vocab import DEFAULT_BASE
+    from conftest import spark_jobs
+
+    out = str(tmp_path_factory.mktemp("open64"))
+    adapter = ParquetStoreAdapter(spark, out)
+    rows = spark.createDataFrame(
+        [(f"{DEFAULT_BASE}/{g}/O{i}/", "ocgml:name", "v", "literal", None, g, "d", 0, i)
+         for g in ("building", "cityobject") for i in range(640)],
+        "subj string, pred string, obj string, obj_type string, "
+        "datatype string, graph string, doc_id string, span_idx int, pos int",
+    )
+    adapter.overwrite_partitions(materialize.with_bucket(rows, n_buckets=64))
+    parts = adapter.list_partitions()
+    assert {g for g, _, _ in parts} == {"building", "cityobject"}
+    assert sum(1 for g, _, _ in parts if g == "building") > 32
+
+    read, _, tasks = spark_jobs(spark, lambda: materialize.read_triples(spark, out))
+    assert tasks <= 1
+    reg = StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=out)
+    resolved, _, tasks = spark_jobs(
+        spark, lambda: reg.resolve(f"{DEFAULT_BASE}/cityobject/O1/")
+    )
+    assert tasks <= 1
+
+    g, b, _ = parts[-1]
+    want = sum(adapter.file_counts(g, b).values())
+    assert want > 0
+    for df in (read, resolved):
+        assert df.where((F.col("graph") == g) & (F.col("bucket") == b)).count() == want
