@@ -29,7 +29,7 @@ from citykg.fixtures import (
     SPAN_LAYOUT,
 )
 from citykg.ops import dedup, geo, graph, multimodal, owl, similarity, sketch, text
-from citykg.session import local_frame
+from citykg.session import local_frame, stable
 from citykg.vocab import DEFAULT_BASE, OCGML
 
 REHOME_BASE = "http://www.theworldavatar.com/citieskg/namespace/central/sparql"
@@ -58,7 +58,7 @@ def _triples(spark, sf_dir, graphs=None):
         base = (
             extract.extract_triples(spark, _docs(spark, sf_dir))
             .select(*TRIPLE_COLS)
-            .localCheckpoint(eager=False)
+            .transform(stable, eager=False)
         )
         _TRIPLES_CACHE[key] = base
     if graphs:
@@ -401,12 +401,8 @@ def q_kg_canonical_incremental(spark, sf):
 
     # each group frame feeds two consumers (edges + hubs / edges + CC):
     # checkpoint so linking runs once per batch, not once per consumer
-    ga = groups(docs.where(F.col("_d") % 3 == 0).drop("_d")).localCheckpoint(
-        eager=False
-    )
-    gb = groups(docs.where(F.col("_d") % 3 != 0).drop("_d")).localCheckpoint(
-        eager=False
-    )
+    ga = groups(docs.where(F.col("_d") % 3 == 0).drop("_d")).transform(stable, eager=False)
+    gb = groups(docs.where(F.col("_d") % 3 != 0).drop("_d")).transform(stable, eager=False)
     registry = canon.connected_components(
         canon.same_as_edges(ga, "entity_id", "member")
     )
@@ -4767,9 +4763,7 @@ def q_emb_outliers(spark, sf):
     from citykg.ops.similarity import kmeans_lloyd
 
     d = spark.read.parquet(f"{sf}/embeddings.parquet")
-    asg = kmeans_lloyd(d, k=4, iters=3).select("cluster", "dist2").localCheckpoint(
-        eager=False
-    )
+    asg = kmeans_lloyd(d, k=4, iters=3).select("cluster", "dist2").transform(stable, eager=False)
     stats = asg.groupBy("cluster").agg(
         F.count("*").alias("n"),
         F.round(F.avg("dist2"), 6).alias("mean_d2"),
@@ -10450,9 +10444,10 @@ def q_spatial_grid_clusters(spark, sf):
     next to kmeans_assign (centroid-based) and spatial_dwithin (pair
     predicate). Cell counts are ONE partial agg; core-cell adjacency is
     the 3x3-neighbor equi-join (no cartesian — same shape as
-    dwithin_pairs); merging uses canon.connected_components_shortcut —
-    the pointer-shortcutting CC, because grid clusters are CHAINS whose
-    diameter defeats plain min-label propagation in bounded rounds.
+    dwithin_pairs); merging uses canon.connected_components, whose
+    pointer jumping folds grid clusters — CHAINS of cells — in
+    O(log diameter) rounds, where plain min-label propagation needs
+    O(diameter).
     Cell keys are fixed-width digit strings so the min-label IS the
     numeric (cx, cy) minimum on both engines."""
     pts = spark.read.parquet(f"{sf}/documents.parquet").selectExpr(
@@ -10484,7 +10479,7 @@ def q_spatial_grid_clusters(spark, sf):
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-    cc = canon.connected_components_shortcut(edges)
+    cc = canon.connected_components(edges)
     lab = core.join(cc, core.k == cc.id, "left").select(
         "k", "n", F.coalesce("component", "k").alias("cluster_id")
     )

@@ -10,7 +10,7 @@ Importer/Exporter fork, see /root/reference) as idiomatic Spark:
 * stage 2 `link`      — mention -> gazetteer entity linking
                         (broadcast exact-alias join + MinHash-LSH blocking)
 * stage 3 `canon`     — duplicate-entity canonicalization via iterative
-                        connected components (large-star/small-star, salted)
+                        connected components (min-label + pointer jumping, salted)
                         + IRI re-homing
 * stage 4 `materialize` — bucketed, manifest-tracked, resumable triple-store
                         writes (Iceberg `bucket(N, subj)` semantics; plain

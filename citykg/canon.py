@@ -11,9 +11,9 @@ semantics become:
   group minimum), never a clique: a mega-entity appearing in 10^8 docs
   yields 10^8 star edges instead of 10^16 clique pairs. That plus a salted
   two-phase min-agg is the explicit skew handling the north_rule demands.
-* `connected_components` — iterative min-label propagation over DataFrame
-  self-joins (the large-star/small-star family); lineage cut with
-  localCheckpoint every iteration, AQE skew-join on as backstop.
+* `connected_components` — iterative min-label propagation with pointer
+  jumping over DataFrame self-joins, one action per round; lineage cut with
+  `session.stable` every round, AQE skew-join on as backstop.
 * `canonicalize_triples` — rewrite subj/obj IRIs of duplicate entities to
   the canonical (component-min) IRI.
 * `rehome_iris` — regexp_replace base swap (L6).
@@ -43,27 +43,26 @@ def same_as_edges(groups: DataFrame, key: str, member: str, salt: int = 16) -> D
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 20,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """Min-label propagation connected components.
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Min-label propagation with pointer jumping, one action per round.
 
     edges: (src, dst) string ids. Returns (id, component) with component =
-    min id in the component. Converges in O(log diameter) rounds for star
-    inputs (hub compression); each round is one shuffle join + one
-    min-aggregate (map-side combinable, skew-safe).
+    min id in the component; zero edges give zero rows.
 
-    One JOB per round: the convergence test rides the propagation action
-    instead of re-joining new vs old labels afterwards — the label
-    update carries a `_changed` flag (did the propagated min undercut
-    the current label?), the round's single aggregate folds it to a
-    scalar, and that same action materializes the non-eager lineage cut.
-    (The previous shape ran a second join+count job per round — 2x the
-    loop's job count at 10^12-node scale for a scalar the propagation
-    already knew.)
-    """
+    Each round joins three kinds of read against the labels and takes one
+    min-aggregate per reader: every node reads its neighbours' labels
+    (propagation) and its label's label (the pointer jump), and a node's
+    previous label reads the node's current one, so a root hears at once
+    what a member of its tree learned from another tree. Labels stay node
+    ids <= their node, so the jump never raises a label, and chains
+    converge in O(log diameter) rounds where plain propagation needs
+    O(diameter). On stars (what same_as_edges emits) the extra reads are
+    one row per member. The same aggregate carries a `_changed` flag (did
+    the label drop?), and the round's one action folds it to a scalar
+    and materializes the non-eager lineage cut.
+
+    Raises RuntimeError when `max_iter` rounds end with labels still
+    moving: unconverged labels are wrong components, never a result."""
     # materialize the static edge list ONCE: without this every round's
     # propagation join re-executes the full upstream plan (extraction +
     # linking) — O(iters x upstream) instead of O(iters x edges)
@@ -71,43 +70,54 @@ def connected_components(
         edges.select("src", "dst")
         .union(edges.select(F.col("dst"), F.col("src")))
         .distinct()
+        .withColumn("_jump", F.lit(False))
         .transform(stable)
     )
-    nodes = stable(sym.select(F.col("src").alias("id")).distinct())
-    labels = nodes.withColumn("component", F.col("id"))
+    labels = stable(
+        sym.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("component", F.col("id"))
+        .withColumn("_prev", F.col("id"))
+    )
 
-    for i in range(max_iter):
-        # neighbor's current label, propagated over every edge
-        prop = (
-            sym.join(labels.withColumnRenamed("id", "dst")
-                     .withColumnRenamed("component", "n_comp"), "dst")
-            .groupBy("src")
-            .agg(F.min("n_comp").alias("n_comp"))
-            .withColumnRenamed("src", "id")
+    for _ in range(max_iter):
+        # src reads dst's label: the jump (node -> its label) and the
+        # hook (previous label -> node, for nodes whose label just moved)
+        jump = labels.where(F.col("id") != F.col("component")).select(
+            F.col("id").alias("src"), F.col("component").alias("dst"), F.lit(True).alias("_jump")
+        )
+        hook = labels.where(F.col("_prev") != F.col("component")).select(
+            F.col("_prev").alias("src"), F.col("id").alias("dst"), F.lit(False).alias("_jump")
         )
         new_labels = (
-            labels.join(prop, "id", "left")
+            sym.unionByName(jump)
+            .unionByName(hook)
+            .join(labels.select(F.col("id").alias("dst"), F.col("component").alias("n_comp")), "dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(
+                F.min("n_comp").alias("_min"),
+                # the jump row's target is the node's current label; a
+                # root has no jump row and its label is its own id
+                F.max(F.when(F.col("_jump"), F.col("dst"))).alias("_prev"),
+            )
             .select(
                 "id",
-                F.least(F.col("component"), F.coalesce("n_comp", "component")).alias("component"),
-                # convergence witness, folded in the same pass: NULL n_comp
-                # (no propagated min) compares to NULL -> otherwise 0
-                F.when(F.col("n_comp") < F.col("component"), F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("_changed"),
+                F.least("_min", "id").alias("component"),
+                F.coalesce("_prev", "id").alias("_prev"),
             )
+            .withColumn("_changed", (F.col("component") < F.col("_prev")).cast("int"))
+            # non-eager: the convergence aggregate below is the action
+            # that materializes the cut — one action does both
+            .transform(stable, eager=False)
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            # stable(): localCheckpoint by default; reliable checkpoint(dir)
-            # when spark.citykg.checkpointDir is set (executor-loss-safe).
-            # Non-eager: the convergence aggregate below is the action
-            # that materializes the cut — one job does both.
-            new_labels = stable(new_labels, eager=False)
         changed = new_labels.agg(F.sum("_changed")).first()[0] or 0
         labels = new_labels.drop("_changed")
         if changed == 0:
-            break
-    return labels
+            return labels.drop("_prev")
+    raise RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} "
+        "rounds: labels were still moving after the last round"
+    )
 
 
 def incremental_components(
@@ -251,69 +261,4 @@ def fuse_attributes(triples: DataFrame, labels: DataFrame) -> DataFrame:
             "total_mentions",
             (F.col("n_values") > 1).cast("int").alias("conflicted"),
         )
-    )
-
-
-def connected_components_shortcut(edges: DataFrame, max_iter: int = 16) -> DataFrame:
-    """Min-label CC with pointer shortcutting (the two-phase hash-to-min
-    family, Kiveris et al. 2014): each round every node takes the min of
-    its neighbors' labels AND its current label's label (one extra
-    self-join). The distance from any node's label to the component
-    minimum HALVES per round, so paths and grids converge in
-    O(log diameter) rounds where plain `connected_components` min-label
-    propagation needs O(diameter) — use this variant when components can
-    be long chains (grid clusters, road networks) rather than the star
-    shapes same_as_edges emits. Same contract: edges (src, dst) string
-    ids -> (id, component = min reachable id).
-
-    Raises RuntimeError when `max_iter` rounds end with labels still
-    moving: unconverged labels are wrong components, never a result."""
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .transform(stable)
-    )
-    lab = (
-        sym.select(F.col("src").alias("id"))
-        .union(sym.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-    )
-    for _ in range(max_iter):
-        nmin = (
-            sym.join(lab.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), "comp")
-            .groupBy("id")
-            .agg(F.min("comp").alias("_n"))
-        )
-        l1 = lab.join(nmin, "id", "left").select(
-            "id",
-            F.least(F.col("comp"), F.coalesce(F.col("_n"), F.col("comp"))).alias(
-                "comp"
-            ),
-        )
-        l2 = (
-            l1.join(
-                l1.select(F.col("id").alias("_c"), F.col("comp").alias("_cc")),
-                l1.comp == F.col("_c"),
-                "left",
-            )
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("_cc"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .transform(stable)
-        )
-        moved = l2.join(
-            lab.select("id", F.col("comp").alias("_old")), "id"
-        ).where(F.col("comp") != F.col("_old"))
-        lab = l2
-        if moved.isEmpty():
-            return lab.select("id", "comp").withColumnRenamed("comp", "component")
-    raise RuntimeError(
-        f"connected_components_shortcut did not converge in max_iter={max_iter} "
-        "rounds: labels were still moving after the last round"
     )

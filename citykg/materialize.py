@@ -463,7 +463,7 @@ def compact_store(
             # files dynamic overwrite will delete (Iceberg's snapshot
             # isolation gives this for free; the parquet emulation pins the
             # group in executor memory first)
-            .localCheckpoint(eager=True)
+            .transform(stable)
         )
         # expected per-partition row counts from the pinned frame — the
         # write-ahead record the post-commit verify and any future resume

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..link import with_bands, with_minhash
+from ..session import stable
 
 
 def normalize_text(col):
@@ -151,7 +152,7 @@ def incremental_jaccard_pairs(
     sh = (
         word_shingles(fanout_to_parallelism(u, id_col, text_col, "_old"), text_col, n)
         .select(id_col, "_old", "shingle")
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.where(~F.col("_old")).select(F.col(id_col).alias("doc_a"), "shingle")
@@ -581,11 +582,12 @@ def near_dup_clusters(pairs: DataFrame, id_a: str = "doc_a", id_b: str = "doc_b"
     here) into clusters and pick the survivor. Returns (doc_id,
     cluster_id, keep) for every doc appearing in >= 1 pair; cluster_id =
     min doc_id of the transitive cluster, keep = doc is that min (docs
-    in no pair are implicit keeps and not returned). Uses the salted
-    min-label-propagation connected components from canon (one shuffle
-    join + map-side-combinable min per round, O(log diameter) rounds);
-    long ids ride through zero-padded so the string min IS the numeric
-    min."""
+    in no pair are implicit keeps and not returned). Uses
+    canon.connected_components (min-label propagation with pointer
+    jumping: one shuffle join + map-side-combinable min per round, so
+    chained pairs converge in O(log diameter) rounds, and running out of
+    rounds raises); long ids ride through zero-padded so the string min
+    IS the numeric min."""
     from ..canon import connected_components
 
     pad = lambda c: F.format_string("%019d", F.col(c))
@@ -632,7 +634,7 @@ def semantic_dedup(
 
     Scale shape: the dot products are JVM expressions (zip_with +
     aggregate fold — no Python), the self-join is an equi-join on cell
-    (no CartesianProduct), and the cell frame is localCheckpointed once
+    (no CartesianProduct), and the cell frame is cut once (session.stable)
     so Catalyst does not re-derive the quantizer per join side. At 100 TB
     raise n_planes so cells stay executor-sized (2^n_planes cells) and
     let AQE split residual skew; the keep rule (min id in cell wins) is
@@ -653,7 +655,7 @@ def semantic_dedup(
     cells = df.select(
         F.col(id_col), F.col(vec_col), F.expr(" + ".join(terms)).cast("long").alias("cell")
     )
-    cells = with_norm(cells, vec_col).localCheckpoint(eager=False)
+    cells = with_norm(cells, vec_col).transform(stable, eager=False)
     a = cells.select(
         F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"), F.col("_norm").alias("_na"), "cell"
     )
@@ -774,7 +776,7 @@ def bloom_probe(
         word_shingles(eval_df.select(text_col), text_col, n)
         .select("shingle")
         .distinct()
-        .localCheckpoint(eager=False)  # reused by the filter build + exact join
+        .transform(stable, eager=False)  # reused by the filter build + exact join
     )
     bits = (
         ev.select(*[pos_expr(i) for i in range(k)])
@@ -950,7 +952,7 @@ def semantic_threshold_curve(
     cells = df.select(
         F.col(id_col), F.col(vec_col), F.expr(" + ".join(terms)).cast("long").alias("cell")
     )
-    cells = with_norm(cells, vec_col).localCheckpoint(eager=False)
+    cells = with_norm(cells, vec_col).transform(stable, eager=False)
     a = cells.select(
         F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"),
         F.col("_norm").alias("_na"), "cell",

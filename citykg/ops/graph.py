@@ -263,7 +263,7 @@ def triangles(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)  # reused by degree, wedge, and closure
+        .transform(stable, eager=False)  # reused by degree, wedge, and closure
     )
     deg = (
         und.select(F.col("u").alias("id"))
@@ -280,7 +280,7 @@ def triangles(edges: DataFrame) -> DataFrame:
     oriented = e.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("lo"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("hi"),
-    ).localCheckpoint(eager=False)
+    ).transform(stable, eager=False)
     w1 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("p"))
     w2 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("q"))
     wedges = w1.join(w2, "w").where(F.col("p") < F.col("q"))
@@ -487,7 +487,7 @@ def local_clustering(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     deg = (
         und.select(F.col("u").alias("id"))
@@ -610,7 +610,7 @@ def link_prediction(edges: DataFrame, min_common: int = 2) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)  # reused by adjacency, degree, anti-join
+        .transform(stable, eager=False)  # reused by adjacency, degree, anti-join
     )
     adj = und.select(F.col("u").alias("w"), F.col("v").alias("n")).union(
         und.select(F.col("v").alias("w"), F.col("u").alias("n"))
@@ -668,7 +668,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
             counts.groupBy("id")
             .agg(F.min(F.struct(-F.col("_c"), F.col("label"))).alias("_best"))
             .select("id", F.col("_best.label").alias("label"))
-            .transform(lambda df: stable(df, eager=False))
+            .transform(stable, eager=False)
         )
     return labels
 
@@ -691,11 +691,11 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     lu = labels.select(F.col("id").alias("u"), F.col("label").alias("lu"))
     lv = labels.select(F.col("id").alias("v"), F.col("label").alias("lv"))
-    tagged = und.join(lu, "u").join(lv, "v").localCheckpoint(eager=False)
+    tagged = und.join(lu, "u").join(lv, "v").transform(stable, eager=False)
     # one-row edge total folded in-plan (no driver action in the middle)
     mrow = tagged.agg(F.count("*").alias("m"))
     # degree sum per community = sum over endpoints with that label
@@ -743,7 +743,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     deg = (
         und.select(F.col("u").alias("id"))
@@ -796,7 +796,7 @@ def neighborhood_similarity(edges: DataFrame, min_common: int = 2) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)  # reused by adjacency, degree, flag join
+        .transform(stable, eager=False)  # reused by adjacency, degree, flag join
     )
     adj = und.select(F.col("u").alias("w"), F.col("v").alias("n")).union(
         und.select(F.col("v").alias("w"), F.col("u").alias("n"))

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import stable
+
 TOKEN_SPLIT = "[^a-z]+"  # shared with the DuckDB oracle (RE2/Java-safe)
 
 
@@ -160,7 +162,7 @@ def unigram_lm_scores(
     tf = (
         terms.groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     vocab = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     total = vocab.agg(F.sum("c").alias("n_total"))
@@ -280,7 +282,7 @@ def bigram_lm_scores(
     tf = (
         bg.groupBy(id_col, "a", "b")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     cab = tf.groupBy("a", "b").agg(F.sum("tf").alias("c_ab"))
     ca = cab.groupBy("a").agg(F.sum("c_ab").alias("c_a"))
@@ -401,7 +403,7 @@ def chi2_keywords(
     toks = f"filter(split(lower({text_col}), '[^a-z]+'), x -> x <> '')"
     e = df.selectExpr(f"{group_col} as grp", f"explode({toks}) as tok")
     st = e.groupBy("grp", "tok").agg(F.count("*").alias("n_st"))
-    st = st.localCheckpoint(eager=False)  # feeds the group/term/total aggs
+    st = stable(st, eager=False)  # feeds the group/term/total aggs
     gs = st.groupBy("grp").agg(F.sum("n_st").alias("n_g"))
     ts = st.groupBy("tok").agg(F.sum("n_st").alias("n_t"))
     tot = gs.agg(F.sum("n_g").alias("nn"))
@@ -623,12 +625,12 @@ def kneser_ney_scores(
     tf = (
         bg.groupBy(id_col, "a", "b")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     cab = (
         tf.groupBy("a", "b")
         .agg(F.sum("tf").alias("c_ab"))
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     ca = cab.groupBy("a").agg(
         F.sum("c_ab").alias("c_a"), F.count("*").alias("n1_fwd")

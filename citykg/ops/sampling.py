@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import stable
 from .hashing import POLY_P, char_fold_spark
 
 # bucket space for split/sample thresholds: large enough that fraction
@@ -185,7 +186,7 @@ def weighted_mix_rank(
         .withColumn("_key", (F.col("intra") - 1) / F.col(weight_col))
         # two consumers (max agg + merge rank): materialize so the intra
         # pipeline runs once, not once per consumer
-        .localCheckpoint(eager=False)
+        .transform(stable, eager=False)
     )
     # merge rank: bucket by key range (monotone in _key); the range is
     # bounded by a one-row max agg broadcast back onto the frame
@@ -194,7 +195,7 @@ def weighted_mix_rank(
         "_kbkt",
         (F.col("_key") / F.greatest(F.col("_mx") / n_buckets, F.lit(1e-9)))
         .cast("long"),
-    ).localCheckpoint(eager=False)  # consumers: bucket counts + rank join
+    ).transform(stable, eager=False)  # consumers: bucket counts + rank join
     kcounts = keyed.groupBy("_kbkt").agg(F.count("*").alias("_n"))
     koff_w = Window.orderBy("_kbkt").rowsBetween(Window.unboundedPreceding, -1)
     koffsets = kcounts.withColumn(

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..session import local_frame
+from ..session import local_frame, stable
 
 # minimal per-language stopword lists for the n-gram/stopword-ratio
 # language heuristic (languages match the testdata lang column domain)
@@ -481,7 +481,7 @@ def bpe_merges(df: DataFrame, text_col: str = "text", n_merges: int = 6) -> Data
         .agg(F.count("*").alias("cnt"))
     )
     toks = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-    wf = wc.select(F.expr(toks).alias("toks"), "cnt").localCheckpoint(eager=False)
+    wf = wc.select(F.expr(toks).alias("toks"), "cnt").transform(stable, eager=False)
 
     def q(s: str) -> str:
         return s.replace("'", "''")
@@ -512,7 +512,7 @@ def bpe_merges(df: DataFrame, text_col: str = "text", n_merges: int = 6) -> Data
             f"THEN concat(slice(acc, 1, size(acc) - 1), array('{q(merged)}')) "
             f"ELSE concat(acc, array(x)) END)"
         )
-        wf = wf.select(F.expr(fold).alias("toks"), "cnt").localCheckpoint(eager=False)
+        wf = wf.select(F.expr(fold).alias("toks"), "cnt").transform(stable, eager=False)
     return local_frame(
         spark, merges, "rank int, l_sym string, r_sym string, merged string, pair_cnt long"
     )
@@ -549,7 +549,7 @@ def bpe_train_batched(
         .agg(F.count("*").alias("cnt"))
     )
     toks = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-    wf = wc.select(F.expr(toks).alias("toks"), "cnt").localCheckpoint(eager=False)
+    wf = wc.select(F.expr(toks).alias("toks"), "cnt").transform(stable, eager=False)
 
     def q(s: str) -> str:
         return s.replace("'", "''")
@@ -593,7 +593,7 @@ def bpe_train_batched(
             # plan chaining only — no action, no checkpoint: the batch's
             # folds run together inside the next round's pair-count job
             wf = wf.select(F.expr(fold).alias("toks"), "cnt")
-        wf = wf.localCheckpoint(eager=False)
+        wf = stable(wf, eager=False)
     return local_frame(
         spark, merges, "rank int, l_sym string, r_sym string, merged string, pair_cnt long"
     )

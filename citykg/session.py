@@ -70,7 +70,10 @@ def get_spark(
 
 
 def stable(df, eager: bool = True):
-    """Lineage cut for iterative loops (CC / PageRank / betweenness / BFS).
+    """The one lineage cut. Every cut in the package goes through here
+    (iterative loops such as CC / PageRank / betweenness / BFS, frames
+    reused by several consumers, the compaction pin), so the durable mode
+    below reaches all of them.
 
     Default is `localCheckpoint` — executor-local blocks, no extra IO, the
     right call in this sandbox and for short loops. Its documented weakness
@@ -83,16 +86,23 @@ def stable(df, eager: bool = True):
     HDFS/object-store path to flip EVERY loop cut to reliable
     `checkpoint()`: each cut is written to and re-read from durable
     storage, so executor loss only recomputes the current iteration. Cost:
-    one write+read per cut — size `checkpoint_every` accordingly (the
-    loops already expose it)."""
+    one write+read per cut (`graph.pagerank` exposes `checkpoint_every`
+    to cut every k-th round; connected components cuts every round)."""
     sp = df.sparkSession
     ckpt_dir = sp.conf.get("spark.citykg.checkpointDir", "")
     if ckpt_dir:
         sc = sp.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
+        # the conf is authoritative: a dir set (or changed) after the
+        # context started re-points the context's checkpoint dir
+        if _checkpoint_dirs.get(sc.applicationId) != ckpt_dir:
             sc.setCheckpointDir(ckpt_dir)
+            _checkpoint_dirs[sc.applicationId] = ckpt_dir
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+# applicationId -> the spark.citykg.checkpointDir last applied to it
+_checkpoint_dirs: dict[str, str] = {}
 
 
 def arrow_table(rows, schema: str | StructType) -> pa.Table:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .extract import extract_triples
 from .schema import DOC_SCHEMA
+from .session import stable
 from .vocab import DEFAULT_BASE
 
 
@@ -358,7 +359,7 @@ def stream_canonicalize(
     from . import canon
 
     def fold_batch(batch_docs: DataFrame, batch_id: int) -> None:
-        groups = groups_fn(batch_docs).localCheckpoint(eager=True)
+        groups = groups_fn(batch_docs).transform(stable)
         if groups.isEmpty():
             return
         sp = groups.sparkSession
@@ -366,7 +367,7 @@ def stream_canonicalize(
         if current is not None:
             registry = sp.read.parquet(
                 os.path.join(registry_dir, current, "labels")
-            ).localCheckpoint(eager=True)
+            ).transform(stable)
             hubs = sp.read.parquet(os.path.join(registry_dir, current, "hubs"))
             bridged = groups.unionByName(
                 hubs.select("entity_id", F.col("hub").alias("member"))
@@ -376,18 +377,18 @@ def stream_canonicalize(
         else:
             edges = canon.same_as_edges(groups, "entity_id", "member")
             labels = canon.connected_components(edges)
-        labels = labels.localCheckpoint(eager=True)
+        labels = stable(labels)
         new_hubs = groups.groupBy("entity_id").agg(F.min("member").alias("hub"))
         if current is not None:
             old = sp.read.parquet(
                 os.path.join(registry_dir, current, "hubs")
-            ).localCheckpoint(eager=True)
+            ).transform(stable)
             new_hubs = (
                 old.unionByName(new_hubs)
                 .groupBy("entity_id")
                 .agg(F.min("hub").alias("hub"))
             )
-            new_hubs = new_hubs.localCheckpoint(eager=True)
+            new_hubs = stable(new_hubs)
         version = f"v{batch_id:012d}"
         vdir = os.path.join(registry_dir, version)
         labels.write.mode("overwrite").parquet(os.path.join(vdir, "labels"))

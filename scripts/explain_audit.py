@@ -240,7 +240,7 @@ AUDITS = [
     ("tokenizer_oov", "OOV audit: vocab-bounded rank window + broadcast LEFT membership join + one per-doc agg"),
     ("event_idle_gaps", "idle gaps: one lag window + one per-user agg, all-integer"),
     ("event_top_paths", "3-step path mining: one lead window per user + path-keyed partial agg; rank window bounded by |types|^3"),
-    ("spatial_grid_clusters", "grid DBSCAN: cell partial agg + 3x3 equi-join + pointer-shortcut CC (O(log d) rounds on chains)"),
+    ("spatial_grid_clusters", "grid DBSCAN: cell partial agg + 3x3 equi-join + pointer-jumping CC (O(log d) rounds on chains)"),
     ("kg_char_sets", "characteristic sets: per-subject collect_set agg + set-keyed partial agg"),
     ("kg_entity_summary", "entity summary: pred-freq agg broadcast back + per-subject rank window over template-bounded fanout"),
 ]

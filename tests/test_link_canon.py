@@ -1,6 +1,11 @@
 """Entity linking (exact + MinHash-LSH) and canonicalization (CC, salting,
 IRI re-homing)."""
 
+import ast
+import pathlib
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from citykg import canon, link
@@ -87,6 +92,69 @@ def test_connected_components_mega_star(spark):
     comps = cc.groupBy("component").count().collect()
     sizes = sorted(r["count"] for r in comps)
     assert sizes == [2, 5001]
+
+
+def _union_find_components(edges):
+    """Reference labels: id -> min id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _cc(spark, edges, **kw):
+    df = spark.createDataFrame(edges, "src string, dst string")
+    return {r.id: r.component for r in canon.connected_components(df, **kw).collect()}
+
+
+def test_connected_components_long_shuffled_path(spark):
+    # 2,000-node path, edges shuffled and randomly directed: diameter
+    # 1,999 defeats plain min-label propagation in 20 rounds; pointer
+    # jumping needs ~log2(d)
+    rng = random.Random(7)
+    path = [(f"p{i:05d}", f"p{i + 1:05d}")[:: rng.choice((1, -1))] for i in range(1999)]
+    rng.shuffle(path)
+    got = _cc(spark, path)
+    assert len(got) == 2000
+    assert set(got.values()) == {"p00000"}
+
+
+def test_connected_components_path_with_random_ids(spark):
+    # ids in random order along the path: the minimum sits mid-chain and
+    # every tree root must hear of merges through its members
+    ids = [f"q{i:03d}" for i in range(300)]
+    random.Random(300).shuffle(ids)
+    got = _cc(spark, list(zip(ids, ids[1:])))
+    assert len(got) == 300
+    assert set(got.values()) == {"q000"}
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_connected_components_equals_union_find(spark, seed):
+    rng = random.Random(seed)
+    n = (30, 300, 1000, 3000)[seed]
+    ids = [f"n{rng.randrange(10**6):07d}" for _ in range(n)]
+    edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(n)]
+    assert _cc(spark, edges) == _union_find_components(edges)
+
+
+def test_connected_components_empty_edges(spark):
+    assert _cc(spark, []) == {}
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    path = [(f"{i:02d}", f"{i + 1:02d}") for i in range(30)]
+    with pytest.raises(RuntimeError, match="did not converge in max_iter=1"):
+        _cc(spark, path, max_iter=1)
 
 
 def test_canonicalize_triples_rewrites_subj_and_iri_obj(spark):
@@ -180,6 +248,27 @@ def test_reliable_checkpoint_path(spark, tmp_path_factory):
     # durable cut files actually landed under the reliable dir
     files = [f for _, _, fs in os.walk(ckpt) for f in fs]
     assert files, "no reliable checkpoint files written"
+
+
+def test_lineage_cut_only_in_session_stable():
+    """`.localCheckpoint(` appears in the package and the entry module only
+    inside session.stable, the one lineage cut, so
+    spark.citykg.checkpointDir reaches every cut."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    sources = sorted((root / "citykg").rglob("*.py")) + [root / "__spark_entry__.py"]
+    hits = [
+        (py.relative_to(root).as_posix(), n)
+        for py in sources
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    fn = next(
+        f for f in ast.parse((root / "citykg" / "session.py").read_text()).body
+        if isinstance(f, ast.FunctionDef) and f.name == "stable"
+    )
+    assert hits and all(
+        p == "citykg/session.py" and fn.lineno <= n <= fn.end_lineno for p, n in hits
+    ), hits
 
 
 def test_link_editdist_blocked_equals_unblocked(spark):

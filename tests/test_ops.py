@@ -661,6 +661,33 @@ def test_near_dup_clusters_transitive_min(spark):
     }
 
 
+def test_near_dup_clusters_long_chain_is_one_cluster(spark):
+    # 60 chained pairs (61 docs, diameter 60): plain min-label
+    # propagation cannot fold them in the default 20 rounds
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(100, 160)], "doc_a long, doc_b long"
+    )
+    out = dedup.near_dup_clusters(pairs).collect()
+    assert len(out) == 61
+    assert {r.cluster_id for r in out} == {100}
+    assert [r.doc_id for r in out if r.keep] == [100]
+
+
+def test_near_dup_clusters_honours_reliable_checkpoint_dir(spark, tmp_path):
+    """Every cut inside near_dup_clusters goes through session.stable, so
+    with spark.citykg.checkpointDir set its cuts land in that dir."""
+    import os
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
+    spark.conf.set("spark.citykg.checkpointDir", str(tmp_path))
+    try:
+        out = {r.doc_id: r.cluster_id for r in dedup.near_dup_clusters(pairs).collect()}
+    finally:
+        spark.conf.unset("spark.citykg.checkpointDir")
+    assert out == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert [f for _, _, fs in os.walk(tmp_path) for f in fs], "no checkpoint files written"
+
+
 def test_filter_cascade_first_failing_rule_wins(spark):
     looping = " ".join(["loop"] * 30)  # repetitive AND non-english: repetitive wins
     short_and_bad = "x1 y2"            # too_short AND low alpha: too_short wins

@@ -419,36 +419,36 @@ def test_idle_gaps_single_event_user_null_stats(spark):
 
 
 def test_cc_shortcut_converges_on_long_path(spark):
-    from citykg.canon import connected_components_shortcut
+    from citykg.canon import connected_components
 
     # path of 40 nodes: diameter 39 defeats plain min-label propagation
     # in 20 rounds; pointer shortcutting needs ~log2(39) ~ 6
     e = spark.createDataFrame(
         [(f"{i:03d}", f"{i + 1:03d}") for i in range(39)], ["src", "dst"]
     )
-    lab = connected_components_shortcut(e, max_iter=16).collect()
+    lab = connected_components(e, max_iter=16).collect()
     assert len(lab) == 40
     assert all(r["component"] == "000" for r in lab)
 
 
 def test_cc_shortcut_two_components(spark):
-    from citykg.canon import connected_components_shortcut
+    from citykg.canon import connected_components
 
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], ["src", "dst"]
     )
-    got = {r["id"]: r["component"] for r in connected_components_shortcut(e).collect()}
+    got = {r["id"]: r["component"] for r in connected_components(e).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
 def test_cc_shortcut_raises_when_unconverged(spark):
-    from citykg.canon import connected_components_shortcut
+    from citykg.canon import connected_components
 
     # 5-node chain: one round cannot carry the min label "0" to node "4"
     e = spark.createDataFrame([(str(i), str(i + 1)) for i in range(4)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge in max_iter=1"):
-        connected_components_shortcut(e, max_iter=1)
-    got = {r["id"]: r["component"] for r in connected_components_shortcut(e).collect()}
+        connected_components(e, max_iter=1)
+    got = {r["id"]: r["component"] for r in connected_components(e).collect()}
     assert got == dict.fromkeys("01234", "0")
 
 
