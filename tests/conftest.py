@@ -1,3 +1,4 @@
+import os
 import sys
 import uuid
 from pathlib import Path
@@ -10,6 +11,27 @@ from citykg.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+# CityGML documents committed with the tests (tests/data/)
+DATA = Path(__file__).resolve().parent / "data"
+MINIMAL_GML = str(DATA / "minimal.gml")
+LOD1_GML = str(DATA / "lod1.gml")
+
+# files of a CitiesKG checkout; tests that assert facts about these very
+# files skip (see `needs`) where the checkout is absent
+REFERENCE = "/root/reference"
+REF_TEST_GML = f"{REFERENCE}/agents/src/test/resources/test.gml"
+REF_POTSDAM = (
+    f"{REFERENCE}/resources/samples/Potsdam/CityGML/Potsdam_LoD1/Potsdam_LoD1.gml"
+)
+REF_ONTO = f"{REFERENCE}/ontologies/OntoCityGML.owl"
+
+
+def needs(path):
+    """Skip mark for a test that reads `path` from the reference checkout."""
+    return pytest.mark.skipif(
+        not os.path.exists(path), reason=f"reference file absent: {path}"
+    )
 
 
 def spark_jobs(spark, fn):

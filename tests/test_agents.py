@@ -9,6 +9,7 @@ import pathlib
 import urllib.request
 
 import pytest
+from conftest import MINIMAL_GML
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -27,7 +28,9 @@ from citykg.fixtures import synth_docs
 from citykg.vocab import DEFAULT_BASE
 
 SF = "/root/testdata/sf0.001"
-TEST_GML = "/root/reference/agents/src/test/resources/test.gml"
+# a committed stand-in of the same shape as the reference's agents test.gml
+# (one cityObjectMember holding one bldg:Building), not that file
+TEST_GML = MINIMAL_GML
 
 
 def _iri(d):

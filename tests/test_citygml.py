@@ -1,5 +1,7 @@
 """P/R >= 0.95 vs independently-derived golden triples from the reference's
-own CityGML fixtures (BASELINE.md correctness metric).
+own CityGML fixtures (BASELINE.md correctness metric), and from the two
+committed documents under tests/data/ of the same shapes. The reference
+cases run only where the CitiesKG checkout exists (conftest.REFERENCE).
 
 The golden sets below are derived straight from the fixture XML with a
 separate, purpose-written walk (NOT citykg.citygml), following the
@@ -18,14 +20,15 @@ lastModificationDate is wall-clock in the reference (DBCityObject.java:412)
 import xml.etree.ElementTree as ET
 
 import pytest
+from conftest import LOD1_GML, MINIMAL_GML, REF_POTSDAM, REF_TEST_GML, needs
 
 from citykg.citygml import parse_citygml
 from citykg.extract import extract_triples
 from citykg.schema import DOC_SCHEMA
 from citykg.vocab import DEFAULT_BASE as B
 
-TEST_GML = "/root/reference/agents/src/test/resources/test.gml"
-POTSDAM = "/root/reference/resources/samples/Potsdam/CityGML/Potsdam_LoD1/Potsdam_LoD1.gml"
+TEST_GML = REF_TEST_GML
+POTSDAM = REF_POTSDAM
 
 PRESENCE_ONLY = {"ocgml:lastModificationDate"}
 
@@ -184,7 +187,15 @@ def _pr(emitted, golden):
     return tp / len(e) if e else 0.0, tp / len(g) if g else 0.0, e, g
 
 
-@pytest.mark.parametrize("path", [TEST_GML, POTSDAM], ids=["test_minimal", "potsdam_lod1"])
+@pytest.mark.parametrize(
+    "path",
+    [
+        pytest.param(TEST_GML, id="test_minimal", marks=needs(TEST_GML)),
+        pytest.param(POTSDAM, id="potsdam_lod1", marks=needs(POTSDAM)),
+        pytest.param(MINIMAL_GML, id="repo_minimal"),
+        pytest.param(LOD1_GML, id="repo_lod1"),
+    ],
+)
 def test_precision_recall_vs_reference_fixture(spark, path):
     emitted = _emitted(spark, path)
     golden = _golden(path)
@@ -195,6 +206,7 @@ def test_precision_recall_vs_reference_fixture(spark, path):
     assert p == 1.0 and r == 1.0
 
 
+@needs(POTSDAM)
 def test_potsdam_counts(spark):
     emitted = _emitted(spark, POTSDAM)
     subjects = {

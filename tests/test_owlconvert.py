@@ -3,6 +3,8 @@ plus the TBox -> G5-check wiring."""
 
 import os
 
+from conftest import REF_ONTO, needs
+
 from citykg.owlconvert import (
     OWL_NS,
     RDFS_NS,
@@ -13,7 +15,7 @@ from citykg.owlconvert import (
     read_owl_tbox,
 )
 
-ONTO = "/root/reference/ontologies/OntoCityGML.owl"
+ONTO = REF_ONTO
 OCG = "http://www.theworldavatar.com/ontology/ontocitygml/citieskg/OntoCityGML.owl#"
 
 MINI = """<?xml version="1.0"?>
@@ -50,6 +52,7 @@ def test_parse_mini_rdfxml():
     assert card == [("1", "http://www.w3.org/2001/XMLSchema#int")]
 
 
+@needs(ONTO)
 def test_reference_ontology_loads(spark):
     tbox = read_owl_tbox(spark, ONTO)
     n = tbox.count()
@@ -63,6 +66,7 @@ def test_reference_ontology_loads(spark):
     assert OCG + "AbstractGMLType" in {r.obj for r in subs}
 
 
+@needs(ONTO)
 def test_owl_to_nquads_roundtrip(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("tbox_nq"))
     owl_to_nquads(spark, ONTO, f"{out}/q")

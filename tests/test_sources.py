@@ -8,6 +8,7 @@ import os
 import zipfile
 
 import pytest
+from conftest import MINIMAL_GML
 
 from citykg.sources import (
     docs_from_text,
@@ -19,7 +20,10 @@ from citykg.sources import (
     split_rejects,
 )
 
-TEST_GML = "/root/reference/agents/src/test/resources/test.gml"
+# a committed stand-in of the same shape as the reference's agents test.gml
+# (one cityObjectMember, one bldg:Building), not that file: any CityGML
+# document exercises the dispatch and the archive path
+TEST_GML = MINIMAL_GML
 
 CJ = (
     '{"type":"CityJSON","version":"1.1","vertices":[[0,0,0],[1,0,0],[1,1,0],[0,1,0]],'
@@ -82,7 +86,7 @@ def test_route_parse_dispatch_and_reject(spark):
 
 @pytest.mark.parametrize("rename", [False, True])
 def test_zipped_reference_fixture_equals_bare(spark, tmp_path, rename):
-    # a zipped (and optionally extension-lying) copy of the reference
+    # a zipped (and optionally extension-lying) copy of the CityGML
     # fixture must parse to the identical doc set — bytes decide, not names
     zp = os.path.join(tmp_path, "fixtures.zip" if not rename else "fixtures.dat")
     with zipfile.ZipFile(zp, "w") as zf:
