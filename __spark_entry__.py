@@ -9898,9 +9898,12 @@ def q_graph_rich_club(spark, sf):
         F.least("dega", "degb").alias("dmin")
     )
     ks = [1, 2, 4, 8]
+    # a global aggregate over no nodes is one all-NULL row; the oracle's
+    # per-k grouped aggregate has none, so an empty edge set yields no rows
     nodes_agg = deg.agg(
-        *[F.sum((F.col("deg") > k).cast("long")).alias(f"n{k}") for k in ks]
-    )
+        F.count("*").alias("n_all"),
+        *[F.sum((F.col("deg") > k).cast("long")).alias(f"n{k}") for k in ks],
+    ).where(F.col("n_all") > 0)
     edges_agg = ed.agg(
         *[F.sum((F.col("dmin") > k).cast("long")).alias(f"e{k}") for k in ks]
     )

@@ -30,11 +30,15 @@ Reference parity (agents/src/main/java/uk/ac/cam/cares/twa/cities/):
   distance runs on.
 
 Scale shape: requests carry a bounded IRI list (a UI click or a tile),
-so the iris side of every join here is a broadcast-able literal frame —
-an Arrow LocalRelation (`session.local_frame`), planned as a
-LocalTableScan under the broadcast, so answering a request starts no
-Python worker; the corpus side stays a partitioned triple scan. Nothing
-in this module collects more than the request's own result rows.
+so lookups scope the triple scan with literal filters, not a join:
+`subj IN (<iris>)`, pushed to parquet on the subject-sorted files, and —
+when the store records its bucket count N (StoreRegistry.lookup) —
+`bucket IN (pmod(xxhash64(<iri>), N) ...)`, which Spark folds into
+partition filters, so a lookup reads only its subjects' buckets. Other
+request tables (distance pairs, export ids) are Arrow LocalRelations
+(`session.local_frame`), so answering a request starts no Python
+worker. Nothing in this module collects more than the request's own
+result rows.
 """
 
 from __future__ import annotations
@@ -102,11 +106,18 @@ def _require_post_iris(request: dict) -> list[str]:
     return [_require_url(i) for i in iris]
 
 
-def _iris_frame(spark: SparkSession, iris: list[str], col: str = "iri") -> DataFrame:
-    """Request-side literal frame, an Arrow LocalRelation: no Python
-    worker runs per request. Requests are UI-bounded (tens of iris), so
-    this side of every join below broadcasts."""
-    return local_frame(spark, [(i,) for i in iris], f"{col} string")
+def _subjects(triples: DataFrame, iris: list[str], n_buckets: int | None) -> DataFrame:
+    """The rows of the requested subjects. Requests are UI-bounded (tens
+    of iris), so both filters are literal lists: `subj IN` reaches
+    parquet as a pushed filter, and with the store's bucket count
+    `bucket IN` folds to constant partition filters (None: a frame
+    without a recorded spec, every bucket is scanned)."""
+    out = triples.where(F.col("subj").isin(iris))
+    if n_buckets is None:
+        return out
+    return out.where(
+        F.col("bucket").isin([materialize.bucket_of(F.lit(i), n_buckets) for i in iris])
+    )
 
 
 def _envelope_centroids(triples: DataFrame) -> DataFrame:
@@ -164,16 +175,17 @@ class StoreRegistry:
     keyed on the store's `_manifest` file listing: every write, upsert,
     delete and compaction appends a manifest file, so the first resolve
     after one re-reads the store instead of serving a frame whose file
-    listing the write made stale."""
+    listing the write made stale. The frame travels with the store's
+    recorded bucket count (`lookup`), which agents prune lookups by."""
 
     def __init__(self, spark: SparkSession) -> None:
         self._spark = spark
         self._dirs: dict[str, str] = {}
         self._frames: dict[str, DataFrame] = {}
-        # store dir endpoint -> (manifest listing, frame read under it);
-        # one tuple per entry, so concurrent resolves never pair a frame
-        # with another read's listing
-        self._read: dict[str, tuple[frozenset[str], DataFrame]] = {}
+        # store dir endpoint -> (manifest listing, frame read under it,
+        # recorded bucket count); one tuple per entry, so concurrent
+        # resolves never pair a frame with another read's listing
+        self._read: dict[str, tuple[frozenset[str], DataFrame, int | None]] = {}
 
     def register(self, endpoint: str, store_dir: str | None = None,
                  triples: DataFrame | None = None) -> None:
@@ -194,18 +206,25 @@ class StoreRegistry:
         return ep if (ep in self._dirs or ep in self._frames) else None
 
     def resolve(self, iri: str) -> DataFrame:
+        return self.lookup(iri)[0]
+
+    def lookup(self, iri: str) -> tuple[DataFrame, int | None]:
+        """The store for `iri` and its recorded bucket count (None for a
+        registered frame or a store without metadata.json)."""
         ep = self.target_resource_id(iri)
         if ep is None:
             raise BadRequestException(f"no registered store for {iri!r}")
         if ep in self._frames:
-            return self._frames[ep]
+            return self._frames[ep], None
         m = materialize.manifest_path(self._dirs[ep])
         stamp = frozenset(os.listdir(m)) if os.path.isdir(m) else frozenset()
         cached = self._read.get(ep)
         if cached is None or cached[0] != stamp:
-            cached = (stamp, materialize.read_triples(self._spark, self._dirs[ep]))
+            adapter = materialize._adapter(self._spark, self._dirs[ep])
+            spec = adapter.spec()
+            cached = (stamp, adapter.read(), spec.n_buckets if spec else None)
             self._read[ep] = cached
-        return cached[1]
+        return cached[1], cached[2]
 
 
 # ---------------------------------------------------------------------------
@@ -231,20 +250,20 @@ class CityInformationAgent:
                     raise BadRequestException(f"context for {agent_url} lacks TotalGFA")
         return bool(iris) or True
 
-    def info_frame(self, triples: DataFrame, request: dict) -> DataFrame:
+    def info_frame(
+        self, triples: DataFrame, request: dict, n_buckets: int | None = None
+    ) -> DataFrame:
         """createInfoTable branch (:185-206) as a DataFrame: every
         attribute row of each requested city object. The reference pulls
         the CityObject model then `setEnvelopeType(null)` before
         serializing (:199) — mirrored by dropping EnvelopeType rows.
-        Plan: broadcast the request iris into a semi-join against the
-        cityobject graph scan; no shuffle on the corpus side."""
+        Plan: one cityobject scan scoped by `subj IN (<iris>)` and, with
+        the store's bucket count `n_buckets`, by `bucket IN` their
+        buckets — no join, no shuffle."""
         iris = _require_post_iris(request)
-        spark = triples.sparkSession
-        want = F.broadcast(_iris_frame(spark, iris, "subj"))
         return (
-            triples.where(F.col("graph") == "cityobject")
+            _subjects(triples.where(F.col("graph") == "cityobject"), iris, n_buckets)
             .where(F.col("pred") != "ocgml:EnvelopeType")
-            .join(want, "subj")
             .select(F.col("subj").alias("iri"), "pred", "obj")
         )
 
@@ -277,24 +296,26 @@ class CityInformationAgent:
             out = out.where(cond)
         return out.select("iri", "zone", F.round("gfa", 6).alias("gfa"))
 
-    def distance_filter_frame(self, triples: DataFrame, request: dict) -> DataFrame:
+    def distance_filter_frame(
+        self, triples: DataFrame, request: dict, n_buckets: int | None = None
+    ) -> DataFrame:
         """Suitable-Site-Selector branch (:159-182, DistanceFilterTask):
         for each requested city object, every other city object whose
         envelope centroid lies within `searchDistance` metres (2D, the
         metric database SRS). Plan: the corpus centroids come from ONE
-        filtered scan; the request side is a broadcast literal frame, so
-        the candidate join is broadcast (8 query rows x corpus, filtered
-        in the same stage) — no shuffle, no self-join of the corpus."""
+        filtered scan; the query centroids from a scan scoped like
+        info_frame's (`subj IN`, and `bucket IN` with `n_buckets`), so
+        the candidate join is broadcast (a few query rows x corpus,
+        filtered in the same stage) — no shuffle, no self-join of the
+        corpus."""
         iris = _require_post_iris(request)
         try:
             radius = float(request[SEARCH_DISTANCE])
         except (KeyError, TypeError, ValueError):
             raise BadRequestException("searchDistance must be numeric")
-        spark = triples.sparkSession
         all_c = _envelope_centroids(triples).drop("cz")
-        q = (
-            all_c.join(F.broadcast(_iris_frame(spark, iris, "iri")), "iri")
-            .select(F.col("iri").alias("query_iri"), F.col("cx").alias("qx"), F.col("cy").alias("qy"))
+        q = _envelope_centroids(_subjects(triples, iris, n_buckets)).select(
+            F.col("iri").alias("query_iri"), F.col("cx").alias("qx"), F.col("cy").alias("qy")
         )
         d2 = (F.col("cx") - F.col("qx")) * (F.col("cx") - F.col("qx")) + (
             F.col("cy") - F.col("qy")
@@ -309,7 +330,9 @@ class CityInformationAgent:
             )
         )
 
-    def process_request_parameters(self, triples: DataFrame, request: dict) -> dict:
+    def process_request_parameters(
+        self, triples: DataFrame, request: dict, n_buckets: int | None = None
+    ) -> dict:
         """Full servlet contract: validate, run the branch, append results
         to the request object and return it (collects only the request's
         own result rows, like the servlet's JSON response)."""
@@ -317,11 +340,12 @@ class CityInformationAgent:
         if SEARCH_DISTANCE in request:
             out = dict(request)
             out["distanceFilter"] = [
-                r.asDict() for r in self.distance_filter_frame(triples, request).collect()
+                r.asDict()
+                for r in self.distance_filter_frame(triples, request, n_buckets).collect()
             ]
             return out
         out = dict(request)
-        rows = self.info_frame(triples, request).collect()
+        rows = self.info_frame(triples, request, n_buckets).collect()
         by_iri: dict[str, list] = {}
         for r in rows:
             by_iri.setdefault(r["iri"], []).append({"pred": r["pred"], "obj": r["obj"]})
@@ -356,18 +380,13 @@ class DistanceAgent:
         rows = [(a, b) for a, b in itertools.combinations(iris, 2)]
         return local_frame(spark, rows, "iri_a string, iri_b string")
 
-    @staticmethod
-    def _centroids(triples: DataFrame, iris_df: DataFrame) -> DataFrame:
-        """Envelope centroid per requested iri (the skip-last ring
-        average, _envelope_centroids) over the broadcast-semi-joined
-        scan."""
-        scoped = triples.join(
-            F.broadcast(iris_df), triples["subj"] == iris_df["subj"], "left_semi"
-        )
-        return _envelope_centroids(scoped)
-
-    def distances_frame(self, triples: DataFrame, request: dict) -> DataFrame:
-        """(iri_a, iri_b, dist_m) for every i<j request pair.
+    def distances_frame(
+        self, triples: DataFrame, request: dict, n_buckets: int | None = None
+    ) -> DataFrame:
+        """(iri_a, iri_b, dist_m) for every i<j request pair, from the
+        envelope centroids of the requested subjects' rows (scoped like
+        CityInformationAgent.info_frame, by `bucket IN` too with the
+        store's `n_buckets`).
 
         computeDistance:271-284 parity: centroids go through the metric
         CRS before measuring, and the final measure is JTS
@@ -377,9 +396,8 @@ class DistanceAgent:
         geographic-SRS store route through ops.crs.transform_epsg_df first
         (the distance_epsg query exercises that leg)."""
         iris = _require_post_iris(request)
-        spark = triples.sparkSession
-        pairs = self._pairs_frame(spark, iris)
-        c = self._centroids(triples, _iris_frame(spark, iris, "subj"))
+        pairs = self._pairs_frame(triples.sparkSession, iris)
+        c = _envelope_centroids(_subjects(triples, iris, n_buckets))
         a = c.select(F.col("iri").alias("iri_a"), F.col("cx").alias("ax"), F.col("cy").alias("ay"))
         b = c.select(F.col("iri").alias("iri_b"), F.col("cx").alias("bx"), F.col("cy").alias("by"))
         return (
@@ -414,6 +432,7 @@ class DistanceAgent:
         triples: DataFrame,
         request: dict,
         cached: DataFrame | None = None,
+        n_buckets: int | None = None,
     ) -> dict:
         """Full contract: validate, reuse cached distances from the
         `distance` graph when present (getDistance:106-115 — the agent
@@ -421,7 +440,7 @@ class DistanceAgent:
         append KEY_DISTANCES in pair order."""
         self.validate_input(request)
         iris = list(request[KEY_IRIS])
-        d = self.distances_frame(triples, request)
+        d = self.distances_frame(triples, request, n_buckets)
         if cached is not None:
             # cached: (iri_a, iri_b, dist_m) previously written back —
             # stored pairs win in either orientation (getDistance:106-115).
@@ -994,9 +1013,12 @@ def dispatch(
     the first iri's namespace, or the `namespace` key — before the agent
     runs (the reference's AccessAgentMapping route step); an unregistered
     namespace keeps the default `triples`, mirroring the reference's
-    null -> keep-current-route behavior."""
+    null -> keep-current-route behavior. A resolved store's recorded
+    bucket count goes to the info and distance agents, which read only
+    the requested subjects' buckets."""
     request = dict(request)
     request.setdefault(KEY_REQ_METHOD, method)
+    n_buckets = None
     if registry is not None:
         probe = None
         iris = request.get(KEY_IRIS)
@@ -1006,11 +1028,15 @@ def dispatch(
             ep = str(request[KEY_NAMESPACE]).rstrip("/")
             probe = ep + "/cityobject/X/"  # endpoint given directly: pad 2 segments
         if probe is not None and registry.target_resource_id(probe) is not None:
-            triples = registry.resolve(probe)
+            triples, n_buckets = registry.lookup(probe)
     if route == CityInformationAgent.URI:
-        return CityInformationAgent().process_request_parameters(triples, request)
+        return CityInformationAgent().process_request_parameters(
+            triples, request, n_buckets=n_buckets
+        )
     if route == DistanceAgent.URI_DISTANCE:
-        return DistanceAgent().process_request_parameters(triples, request)
+        return DistanceAgent().process_request_parameters(
+            triples, request, n_buckets=n_buckets
+        )
     if route == ThematicSurfaceDiscoveryAgent.URI_LISTEN:
         return ThematicSurfaceDiscoveryAgent().process_request_parameters(triples, request)
     if route == UPRNAgent.URI_LISTEN:

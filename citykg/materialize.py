@@ -16,10 +16,13 @@ chunk-wise agent pipeline (CityImportAgent.importChunk) with Spark tasks
 instead of subprocess chains.
 
 Store metadata stays on the driver, as Iceberg's does: the manifest is
-written and read with pyarrow (`_append_manifest`, `_manifest_rows`) and
-store reads discover partitions on the driver (store.ParquetStoreAdapter
-.read), so opening, upserting and compacting the store start no Spark
-job per partition and none per manifest row.
+written and read with pyarrow (`_append_manifest`, `_manifest_rows`),
+every commit records the table spec (schema, bucket count, sort order,
+snapshot id) in `metadata.json` (store.ParquetStoreAdapter.commit_spec),
+and store reads open with the recorded schema and discover partitions
+on the driver (store.ParquetStoreAdapter.read), so opening, upserting
+and compacting the store start no schema-inference job, none per
+partition and none per manifest row.
 """
 
 from __future__ import annotations
@@ -32,19 +35,26 @@ from collections import namedtuple
 
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schema import MANIFEST_SCHEMA
 from .session import arrow_table, local_frame, stable
+from .store import SORT_ORDER, ParquetStoreAdapter, table_schema
 
 DEFAULT_BUCKETS = 64
 
 
+def bucket_of(subj: Column, n_buckets: int) -> Column:
+    """The store's bucket of `subj`: pmod(xxhash64(subj), N) as int. The
+    one hash expression: writes partition rows by it, and agent lookups
+    apply it to literal IRIs, which Spark folds to constant partition
+    filters."""
+    return F.pmod(F.xxhash64(subj), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    return triples.withColumn(
-        "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-    )
+    return triples.withColumn("bucket", bucket_of(F.col("subj"), n_buckets))
 
 
 def manifest_path(out_dir: str) -> str:
@@ -103,9 +113,50 @@ def _adapter(spark: SparkSession, out_dir: str):
     citykg.store.ParquetStoreAdapter — the one-class swap surface for a
     real Iceberg catalog (store.py documents the 1:1 method mapping;
     tests/test_store_conformance.py pins the shared semantics)."""
-    from .store import ParquetStoreAdapter
-
     return ParquetStoreAdapter(spark, out_dir)
+
+
+def _columns(schema) -> list[tuple[str, str]]:
+    return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
+
+
+def _check_spec(adapter, n_buckets: int | None, triples: DataFrame | None = None) -> int:
+    """The bucket count a commit writes with: the recorded one, else
+    the caller's, else DEFAULT_BUCKETS. Raises ValueError, before
+    anything is written, when `n_buckets` or the columns of `triples`
+    disagree with the recorded spec: rows hashed with another N land in
+    buckets no lookup of their subject reads and leave old rows of that
+    subject alive, and a store has one schema."""
+    spec = adapter.spec()
+    if spec is None:
+        return n_buckets or DEFAULT_BUCKETS
+    if n_buckets is not None and n_buckets != spec.n_buckets:
+        raise ValueError(
+            f"store {adapter.root} is recorded with {spec.n_buckets} buckets, "
+            f"not {n_buckets}"
+        )
+    if triples is not None:
+        got = _columns(table_schema(with_bucket(triples, spec.n_buckets)))
+        if got != _columns(spec.schema):
+            raise ValueError(
+                f"columns {got} differ from the schema recorded for store "
+                f"{adapter.root}: {_columns(spec.schema)}"
+            )
+    return spec.n_buckets
+
+
+def _record_commit(adapter, created: bool, bucketed: DataFrame | None = None,
+                   n_buckets: int | None = None) -> None:
+    """Record a commit in metadata.json, before its manifest rows (a
+    reader that sees the rows sees the spec): a store that has the file
+    gets the next snapshot id; a commit that created the table writes the
+    first, with `bucketed`'s schema and `n_buckets`. A store written
+    without the file stays without it, since its N is unknown."""
+    spec = adapter.spec()
+    if spec is not None:
+        adapter.commit_spec(spec.schema, spec.n_buckets, spec.snapshot_id + 1)
+    elif created:
+        adapter.commit_spec(table_schema(bucketed), n_buckets, 1)
 
 
 def write_triples(
@@ -113,7 +164,7 @@ def write_triples(
     triples: DataFrame,
     out_dir: str,
     stage: str = "materialize",
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     input_snapshot: str = "",
     bucket_group: int = 8,
     fail_after_groups: int | None = None,
@@ -135,9 +186,16 @@ def write_triples(
     (resume granularity = the whole load: nothing is marked done until
     the one commit lands, so a crashed bulk load simply re-runs).
 
+    `n_buckets` defaults to the store's recorded bucket count (a fresh
+    store: DEFAULT_BUCKETS); one that disagrees with it raises
+    ValueError, as do columns that differ from the recorded schema.
+
     `fail_after_groups` injects a crash for the resume test.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    adapter = _adapter(spark, out_dir)
+    n_buckets = _check_spec(adapter, n_buckets, triples)
+    created = not adapter.exists()
     done = completed_buckets(spark, out_dir, stage)
     todo = [b for b in range(n_buckets) if b not in done]
     if not todo:
@@ -150,18 +208,15 @@ def write_triples(
                 "bucket_group to finish with the grouped path"
             )
         t0 = time.time()
-        adapter = _adapter(spark, out_dir)
-        adapter.overwrite_partitions(
-            with_bucket(triples, n_buckets).sortWithinPartitions(
-                "graph", "bucket", "subj"
-            )
-        )
+        bt = with_bucket(triples, n_buckets)
+        adapter.overwrite_partitions(bt.sortWithinPartitions(*SORT_ORDER))
         # per-bucket row counts from footer METADATA (the Iceberg files
         # table); the data is never recomputed or re-scanned
         counts: dict[int, int] = {}
         for g, b, _ in adapter.list_partitions():
             counts[b] = counts.get(b, 0) + sum(adapter.file_counts(g, b).values())
         wall = int((time.time() - t0) * 1000)
+        _record_commit(adapter, created, bt, n_buckets)
         _append_manifest(
             out_dir,
             [(stage, str(b), input_snapshot, counts.get(b, 0), "done", 1, wall)
@@ -180,15 +235,14 @@ def write_triples(
             # then prune point lookups and keep equal subjects adjacent for
             # downstream merge joins — free at write time, paid back on
             # every read (Iceberg: the table's sort order spec)
-            _adapter(spark, out_dir).overwrite_partitions(
-                part.sortWithinPartitions("graph", "bucket", "subj")
-            )
+            adapter.overwrite_partitions(part.sortWithinPartitions(*SORT_ORDER))
             counts = {
                 int(r.bucket): r.cnt
                 for r in part.groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
             }
             wall = int((time.time() - t0) * 1000)
             attempt = 1
+            _record_commit(adapter, created, bt, n_buckets)
             _append_manifest(
                 out_dir,
                 [
@@ -208,7 +262,7 @@ def upsert_triples(
     spark: SparkSession,
     triples: DataFrame,
     out_dir: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     input_snapshot: str = "",
 ) -> None:
     """Re-import semantics (the reference's importer against an existing
@@ -225,9 +279,16 @@ def upsert_triples(
     (`upsert-delete:<snap>`, `upsert:<snap>`) land in one append AFTER
     the data, so a replay of a crashed upsert re-deletes and re-appends
     (streaming.upsert_epoch). The incoming subject set stays a DataFrame
-    end-to-end — no driver-side collect of ids."""
+    end-to-end — no driver-side collect of ids.
+
+    The batch is bucketed with the store's recorded bucket count; an
+    `n_buckets` or batch columns that disagree with the recorded spec
+    raise ValueError before anything is written (`n_buckets` is used as
+    given only for a store without the spec, DEFAULT_BUCKETS if None)."""
     t0 = time.time()
     adapter = _adapter(spark, out_dir)
+    n_buckets = _check_spec(adapter, n_buckets, triples)
+    created = not adapter.exists()
     # the batch is extracted ONCE: the per-bucket count fills the cache,
     # and the delete scan and the append reuse it. A cache, not a
     # checkpoint: the cached relation reports its real size, so the
@@ -242,7 +303,7 @@ def upsert_triples(
         if not counts:
             return
         rows: list[tuple] = []
-        if adapter.exists():
+        if not created:
             removed = _delete_subjects_df(
                 spark, out_dir, bt, sorted(counts), drop_references=False
             )
@@ -251,7 +312,8 @@ def upsert_triples(
                      for b, n in sorted(removed.items())]
         # keep the subject-sorted file property write_triples establishes —
         # row-group subj min/max pruning must survive upserts too
-        adapter.append(bt.sortWithinPartitions("graph", "bucket", "subj"))
+        adapter.append(bt.sortWithinPartitions(*SORT_ORDER))
+        _record_commit(adapter, created, bt, n_buckets)
     finally:
         bt.unpersist()
     wall = int((time.time() - t0) * 1000)
@@ -264,7 +326,7 @@ def delete_subjects(
     spark: SparkSession,
     out_dir: str,
     subjects: list[str],
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     drop_references: bool = True,
     stage: str = "delete",
 ) -> int:
@@ -282,9 +344,14 @@ def delete_subjects(
     (On Iceberg this is a copy-on-write `DELETE FROM ... WHERE subj IN
     (...)`; the parquet emulation rewrites the touched partitions and
     clears partitions that become empty.)
+
+    Subjects are bucketed with the store's recorded bucket count, as in
+    upsert_triples.
     """
+    adapter = _adapter(spark, out_dir)
     subj_b = with_bucket(
-        local_frame(spark, [(s,) for s in subjects], "subj string"), n_buckets
+        local_frame(spark, [(s,) for s in subjects], "subj string"),
+        _check_spec(adapter, n_buckets),
     )
     buckets = sorted(int(r.bucket) for r in subj_b.select("bucket").distinct().collect())
     if not buckets:
@@ -292,6 +359,7 @@ def delete_subjects(
     removed = _delete_subjects_df(
         spark, out_dir, subj_b, buckets, drop_references=drop_references
     )
+    _record_commit(adapter, created=False)
     _append_manifest(
         out_dir,
         [(stage, str(b), "", n, "done", 1, 0) for b, n in sorted(removed.items())],
@@ -365,7 +433,7 @@ def _delete_subjects_df(
         # from (the overwrite would otherwise invalidate the lazy plan's
         # file list)
         keep = stable(keep.select(*t.columns))
-        adapter.overwrite_partitions(keep.sortWithinPartitions("graph", "bucket", "subj"))
+        adapter.overwrite_partitions(keep.sortWithinPartitions(*SORT_ORDER))
     # dynamic overwrite only replaces partitions present in `keep`; a
     # partition whose rows ALL died is cleared explicitly (Iceberg's
     # snapshot delete handles this natively)
@@ -458,7 +526,7 @@ def compact_store(
             read_triples(spark, out_dir)
             .where(_partitions_pred((g, b) for g, b, _ in grp))
             .repartition("graph", "bucket")
-            .sortWithinPartitions("graph", "bucket", "subj")
+            .sortWithinPartitions(*SORT_ORDER)
             # materialize BEFORE the overwrite: the rewrite reads the very
             # files dynamic overwrite will delete (Iceberg's snapshot
             # isolation gives this for free; the parquet emulation pins the
@@ -477,7 +545,7 @@ def compact_store(
             [(stage, f"{g}/{b}", "", expected.get((g, b), 0), "pending", 1, 0)
              for g, b, _ in grp],
         )
-        _adapter(spark, out_dir).overwrite_partitions(part)
+        adapter.overwrite_partitions(part)
         for g, b, _ in grp:
             counts = _parquet_footer_counts(os.path.join(path, f"graph={g}", f"bucket={b}"))
             if len(counts) != 1 or next(iter(counts.values())) != expected.get((g, b), 0):
@@ -486,6 +554,7 @@ def compact_store(
                     f"files={counts}, expected one file of {expected.get((g, b), 0)} rows"
                 )
         wall = int((time.time() - t0) * 1000)
+        _record_commit(adapter, created=False)
         _append_manifest(
             out_dir,
             [(stage, f"{g}/{b}", "", expected.get((g, b), 0), "done", 1, wall)

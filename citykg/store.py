@@ -5,7 +5,7 @@ lineage manifests because the real Iceberg runtime cannot be installed
 in this environment (materialize.py:1-17). This module makes the
 engine-swap surface EXPLICIT: one class — `ParquetStoreAdapter` — owns
 every physical read/write the store performs, and swapping in Iceberg
-means implementing the same five methods against a catalog table. The
+means implementing the same methods against a catalog table. The
 conformance tests (tests/test_store_conformance.py) pin exactly the
 semantics both implementations must share, so the swap is a conformance
 run, not a leap of faith.
@@ -16,8 +16,12 @@ Mapping table (parquet emulation -> Iceberg):
 |-------------------------|--------------------------------------------|-----------------------------------------------|
 | append(df)              | write.mode('append').partitionBy(g, b)     | df.writeTo(tbl).append()                      |
 | overwrite_partitions(df)| dynamic partitionOverwriteMode + overwrite | df.writeTo(tbl).overwritePartitions()         |
-| read()                  | spark.read.parquet(root/triples),          | spark.table(tbl)                              |
-|                         | partition discovery on the driver          |                                               |
+| read()                  | spark.read.schema(<recorded schema>)       | spark.table(tbl)                              |
+|                         | .parquet(root/triples), partition          |                                               |
+|                         | discovery on the driver                    |                                               |
+| spec() / commit_spec()  | root/metadata.json: schema, partition spec | table metadata.json (current-schema, default  |
+|                         | with bucket count, sort order, snapshot    | spec, sort order, current-snapshot-id),       |
+|                         | id; json write + atomic rename on driver   | swapped by the catalog commit                 |
 | list_partitions()       | driver-side directory listing              | SELECT ... FROM tbl.partitions (metadata)     |
 | file_counts(graph, b)   | parquet FOOTER num_rows per file           | tbl.files metadata table (record_count)       |
 | manifest append / read  | pyarrow write + atomic rename on the       | driver-side snapshot / manifest-list commit   |
@@ -48,13 +52,58 @@ Semantics the conformance suite asserts on BOTH sides of the swap:
 5. lineage/snapshots: per-stage manifest rows (stage, partition_range,
    row_count, status) must reconstruct what changed when — the
    emulation's `_manifest` parquet; Iceberg's snapshots + summary.
+
+A store written by materialize.py describes itself: every commit
+(write_triples, upsert_triples, delete_subjects, compact_store) replaces
+`metadata.json` with the table schema, the bucket count N of
+`bucket = pmod(xxhash64(subj), N)`, the sort order and a snapshot id one
+above the last. Readers take the schema from it (no footer-inference
+job) and agent lookups prune to their subjects' buckets with N. A store
+without the file (written through the adapter alone, or before the file
+existed) opens by inference and its lookups scan every bucket.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import time
+import uuid
+from collections import namedtuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# what metadata.json records: the table schema (data columns, then the
+# partition columns, as a read returns them), the bucket count and the
+# current snapshot id
+TableSpec = namedtuple("TableSpec", "schema n_buckets snapshot_id")
+
+# the order every write sorts partition files by, recorded in the metadata
+SORT_ORDER = ("graph", "bucket", "subj")
+
+
+def _nullable(j):
+    """A StructType's JSON with every field, element and value nullable:
+    a parquet read reports every column nullable, so the recorded schema
+    does too."""
+    if isinstance(j, list):
+        return [_nullable(v) for v in j]
+    if not isinstance(j, dict):
+        return j
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull") else _nullable(v)
+        for k, v in j.items()
+    }
+
+
+def table_schema(df: DataFrame) -> StructType:
+    """The schema a read of `df`'s files returns: data columns in frame
+    order, then the partition columns, all nullable."""
+    parts = ParquetStoreAdapter.partition_cols
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    fields += [df.schema[c] for c in parts]
+    return StructType.fromJson(_nullable(StructType(fields).jsonValue()))
 
 
 class ParquetStoreAdapter:
@@ -67,6 +116,7 @@ class ParquetStoreAdapter:
         self.spark = spark
         self.root = out_dir
         self.path = os.path.join(out_dir, "triples")
+        self.metadata_path = os.path.join(out_dir, "metadata.json")
 
     # -- writes ---------------------------------------------------------
     def append(self, df: DataFrame) -> None:
@@ -82,18 +132,69 @@ class ParquetStoreAdapter:
 
     # -- reads ----------------------------------------------------------
     def read(self) -> DataFrame:
-        """The whole table, partitions discovered on the driver: above
-        Spark's default threshold (32 subdirectories under one parent —
-        every 64-bucket graph) the listing would otherwise run as a Spark
-        job with one task per subdirectory, on every store open (Iceberg
-        plans from manifests on the driver as well)."""
+        """The whole table, opened with the recorded schema and with
+        partitions discovered on the driver, so opening starts no Spark
+        job: without a recorded schema Spark infers one from a footer in
+        a one-task job, and above Spark's default threshold (32
+        subdirectories under one parent — every 64-bucket graph) the
+        listing would run as a job with one task per subdirectory
+        (Iceberg plans from metadata on the driver as well)."""
         self.spark.conf.set(
             "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
         )
-        return self.spark.read.parquet(self.path)
+        spec = self.spec()
+        reader = self.spark.read if spec is None else self.spark.read.schema(spec.schema)
+        return reader.parquet(self.path)
 
     def exists(self) -> bool:
         return os.path.exists(self.path)
+
+    # -- table metadata (Iceberg: metadata.json) -------------------------
+    def spec(self) -> TableSpec | None:
+        """The recorded table metadata, or None for a store without it."""
+        try:
+            with open(self.metadata_path) as f:
+                meta = json.load(f)
+        except FileNotFoundError:
+            return None
+        # a store has one schema and one partition spec (commit_spec)
+        (schema,), (spec,) = meta["schemas"], meta["partition-specs"]
+        _, bucket = spec["fields"]
+        return TableSpec(
+            StructType.fromJson(schema),
+            int(bucket["transform"][len("bucket["):-1]),
+            meta["current-snapshot-id"],
+        )
+
+    def commit_spec(self, schema: StructType, n_buckets: int, snapshot_id: int) -> None:
+        """Replace metadata.json: written on the driver under a
+        dot-prefixed temp name, then renamed over the old file in one
+        atomic step, so a reader sees the old metadata or the new, never
+        a torn one (Iceberg: the catalog's metadata-pointer swap)."""
+        meta = {
+            "format-version": 2,
+            "location": self.path,
+            "last-updated-ms": int(time.time() * 1000),
+            "current-schema-id": 0,
+            "schemas": [{"schema-id": 0, **schema.jsonValue()}],
+            "default-spec-id": 0,
+            "partition-specs": [{"spec-id": 0, "fields": [
+                {"name": "graph", "source": "graph", "transform": "identity"},
+                {"name": "bucket", "source": "subj", "transform": f"bucket[{n_buckets}]",
+                 "hash": f"pmod(xxhash64(subj), {n_buckets})"},
+            ]}],
+            "default-sort-order-id": 1,
+            "sort-orders": [{"order-id": 1, "fields": [
+                {"source": c, "direction": "asc", "null-order": "nulls-first"}
+                for c in SORT_ORDER
+            ]}],
+            "current-snapshot-id": snapshot_id,
+        }
+        os.makedirs(self.root, exist_ok=True)
+        tmp = os.path.join(self.root, f".metadata-{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(meta, f, indent=1)
+        os.rename(tmp, self.metadata_path)
 
     # -- metadata (Iceberg: the partitions / files metadata tables) -----
     def list_partitions(self) -> list[tuple[str, int, int]]:

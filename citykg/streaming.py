@@ -231,12 +231,13 @@ def stream_extract_to_store(
 
 
 def upsert_epoch(
-    batch_df: DataFrame, out_dir: str, epoch_id: int, n_buckets: int = 16
+    batch_df: DataFrame, out_dir: str, epoch_id: int, n_buckets: int | None = None
 ) -> bool:
     """One idempotent micro-batch application (the foreachBatch body of
     stream_upsert_store, public so replay semantics are directly
     testable). Returns True if the batch was applied, False if it was
-    skipped as already-committed (replay) or empty."""
+    skipped as already-committed (replay) or empty. `n_buckets` follows
+    materialize.upsert_triples: the store's recorded bucket count wins."""
     from . import materialize as mat
 
     stage = f"upsert:epoch-{int(epoch_id)}"
@@ -258,7 +259,7 @@ def stream_upsert_store(
     stream_triples: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 16,
+    n_buckets: int | None = None,
     available_now: bool = True,
 ):
     """Streaming re-import into the bucketed triple store: each

@@ -621,6 +621,76 @@ def test_store_registry_sees_upserts(spark, tmp_path):
     assert names() == ["v2_1"]
 
 
+def _scans(df) -> list[str]:
+    """The FileScan lines of `df`'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [line for line in plan.splitlines() if "FileScan" in line]
+
+
+def _scanned_buckets(scan: str) -> set[int]:
+    """The bucket values of a scan's `bucket IN (..)` partition filter."""
+    import re
+
+    pf = scan.split("PartitionFilters: [", 1)[1].split("], PushedFilters", 1)[0]
+    got = re.findall(r"bucket#\d+ IN \(([\d,]+)\)", pf)
+    assert len(got) == 1, pf
+    return {int(b) for b in got[0].split(",")}
+
+
+def _answer(out: dict):
+    """An agent response with its row lists in a fixed order."""
+    def rows(xs):
+        return sorted(json.dumps(x, sort_keys=True) for x in xs)
+
+    info = [(e["iri"], rows(e["attributes"])) for e in out.get("cityobjectinformation", [])]
+    return info, rows(out.get("distanceFilter", [])), out.get("distances")
+
+
+def test_lookups_read_only_the_requested_buckets(spark, triples, tmp_path):
+    """On a 64-bucket store resolved through a registry, info, distance
+    and the query side of distance filter scan only their subjects'
+    buckets (PartitionFilters) with `subj` pushed to parquet, and answer
+    as the unpruned lookups on the same rows do."""
+    from citykg.agents import StoreRegistry
+
+    store = str(tmp_path / "store64")
+    cityobjects = triples.where(F.col("graph") == "cityobject")
+    materialize.write_triples(spark, cityobjects, store, n_buckets=64, bucket_group=None)
+    reg = StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=store)
+    iris = [_iri(1), _iri(5), _iri(7)]
+    stored, n = reg.lookup(iris[0])
+    assert n == 64
+    want = set(
+        spark.range(1).select(*[materialize.bucket_of(F.lit(i), 64) for i in iris]).first()
+    )
+    assert len(want) > 1
+
+    info, dist = CityInformationAgent(), DistanceAgent()
+    req = {"method": "POST", "iris": iris}
+    for frame in (
+        info.info_frame(stored, req, n),
+        dist.distances_frame(stored, req, n),
+        info.distance_filter_frame(stored, {**req, "searchDistance": 5}, n),
+    ):
+        # every scan with `subj` pushed down reads only the requested
+        # buckets (the distance filter's corpus side reads them all)
+        scoped = [s for s in _scans(frame) if "In(subj" in s]
+        assert scoped
+        assert all(_scanned_buckets(s) == want for s in scoped)
+
+    # pruned answers (store + recorded N, via dispatch) equal unpruned
+    # ones (the in-memory rows, no bucket column)
+    for route, request in (
+        ("/cityobjectinformation", {"iris": iris}),
+        ("/cityobjectinformation", {"iris": iris, "searchDistance": 5}),
+        ("/distance", {"iris": iris}),
+    ):
+        pruned = _answer(dispatch(spark, None, route, request, registry=reg))
+        assert pruned == _answer(dispatch(spark, cityobjects, route, request)), route
+        assert any(pruned), route
+
+
 def _optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 

@@ -213,6 +213,26 @@ def test_rich_club_on_triangle_with_pendant(spark):
     assert deg.where(F.col("deg") > 2).count() == 1  # phi(2) is null-guarded
 
 
+def test_rich_club_empty_edge_set_has_no_rows(spark, tmp_path):
+    """No documents, so no edges: the query and its DuckDB oracle both
+    return zero rows (a global aggregate over no rows would give one
+    all-NULL row, exploded into one row per k)."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as em
+
+    docs = str(tmp_path / "documents.parquet")
+    pq.write_table(pq.read_table(f"{SF}/documents.parquet").slice(0, 0), docs)
+    assert em.queries()["graph_rich_club"](spark, str(tmp_path)).collect() == []
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+        assert con.execute(em.oracle_sql()["graph_rich_club"]).fetchall() == []
+    finally:
+        con.close()
+
+
 def test_t_closeness_invariants(spark):
     import __spark_entry__ as em
 

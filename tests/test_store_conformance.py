@@ -171,3 +171,134 @@ def test_store_open_lists_partitions_on_the_driver(spark, tmp_path_factory):
     assert want > 0
     for df in (read, resolved):
         assert df.where((F.col("graph") == g) & (F.col("bucket") == b)).count() == want
+
+
+def _rows(spark, subjects, graph="building", obj="v1"):
+    return _frame(spark, subjects, graph, obj).drop("bucket")
+
+
+def test_store_with_metadata_opens_without_jobs(spark, tmp_path_factory, monkeypatch):
+    """A store written by `write_triples` records its schema, so
+    `read_triples`, a registry resolve and the store read inside an
+    upsert each launch no Spark job (no footer-schema inference), and the
+    recorded schema is the one inference finds."""
+    from citykg.agents import StoreRegistry
+    from citykg.vocab import DEFAULT_BASE
+    from conftest import spark_jobs
+
+    out = str(tmp_path_factory.mktemp("described"))
+    subjects = [f"{DEFAULT_BASE}/cityobject/O{i}/" for i in range(40)]
+    materialize.write_triples(
+        spark, _rows(spark, subjects, "cityobject"), out, n_buckets=8, bucket_group=None
+    )
+    read, jobs, _ = spark_jobs(spark, lambda: materialize.read_triples(spark, out))
+    assert jobs == 0
+    assert read.schema == spark.read.parquet(os.path.join(out, "triples")).schema
+    reg = StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=out)
+    (_, n), jobs, _ = spark_jobs(spark, lambda: reg.lookup(subjects[0]))
+    assert (n, jobs) == (8, 0)
+
+    read_jobs = []
+    plain_read = ParquetStoreAdapter.read
+
+    def counted_read(self):
+        df, jobs, _ = spark_jobs(self.spark, lambda: plain_read(self))
+        read_jobs.append(jobs)
+        return df
+
+    monkeypatch.setattr(ParquetStoreAdapter, "read", counted_read)
+    materialize.upsert_triples(spark, _rows(spark, subjects[:3], "cityobject", "v2"), out)
+    assert read_jobs == [0]
+
+
+def test_every_commit_records_the_table_spec(spark, tmp_path_factory):
+    """metadata.json holds the schema, the bucket spec and the sort order,
+    and each commit (write, upsert, delete, compaction group) raises the
+    snapshot id by one."""
+    import json
+
+    out = str(tmp_path_factory.mktemp("snapshots"))
+    adapter = ParquetStoreAdapter(spark, out)
+    materialize.write_triples(
+        spark, _rows(spark, [f"S{i}" for i in range(20)]), out, n_buckets=4, bucket_group=2
+    )
+    assert adapter.spec().snapshot_id == 2  # one per bucket group
+    materialize.upsert_triples(spark, _rows(spark, ["S1"], obj="v2"), out)
+    assert adapter.spec().snapshot_id == 3
+    materialize.delete_subjects(spark, out, ["S2"])
+    assert adapter.spec().snapshot_id == 4
+    assert len(materialize.compact_store(spark, out, bucket_group=256)) > 0
+    spec = adapter.spec()
+    assert spec.snapshot_id == 5 and spec.n_buckets == 4
+    assert spec.schema == adapter.read().schema
+    with open(adapter.metadata_path) as f:
+        meta = json.load(f)
+    fields = meta["partition-specs"][0]["fields"]
+    assert [(f["name"], f["transform"]) for f in fields] == [
+        ("graph", "identity"), ("bucket", "bucket[4]")
+    ]
+    assert fields[1]["hash"] == "pmod(xxhash64(subj), 4)"
+    assert [f["source"] for f in meta["sort-orders"][0]["fields"]] == ["graph", "bucket", "subj"]
+    assert len(meta["schemas"]) == 1
+    assert not [f for f in os.listdir(out) if f.endswith(".tmp")]
+
+
+def test_upsert_into_a_store_of_another_bucket_count(spark, tmp_path_factory):
+    """A 40-row, 2-bucket store and an upsert of 10 subjects that names no
+    bucket count: the upsert buckets by the recorded 2 (the old default
+    of 64 left 9 subjects with old and new rows and made partitions a
+    2-bucket store cannot have). A disagreeing explicit count raises
+    before anything is written, for upsert, delete and a write resume."""
+    from citykg import streaming
+
+    out = str(tmp_path_factory.mktemp("wrong_n"))
+    materialize.write_triples(
+        spark, _rows(spark, [f"S{i}" for i in range(40)]), out, n_buckets=2
+    )
+    batch = _rows(spark, [f"S{i}" for i in range(10)], obj="v2")
+    materialize.upsert_triples(spark, batch, out)
+    t = materialize.read_triples(spark, out)
+    assert t.count() == 40
+    assert t.groupBy("subj").count().where("count > 1").count() == 0
+    assert t.where(F.col("obj") == "v2").count() == 10
+    adapter = ParquetStoreAdapter(spark, out)
+    assert {b for _, b, _ in adapter.list_partitions()} <= {0, 1}
+
+    before = _file_state(adapter)
+    with pytest.raises(ValueError, match="recorded with 2 buckets"):
+        materialize.upsert_triples(spark, batch, out, n_buckets=64)
+    with pytest.raises(ValueError, match="recorded with 2 buckets"):
+        streaming.upsert_epoch(batch, out, 7, n_buckets=16)
+    with pytest.raises(ValueError, match="recorded with 2 buckets"):
+        materialize.delete_subjects(spark, out, ["S1"], n_buckets=64)
+    with pytest.raises(ValueError, match="recorded with 2 buckets"):
+        materialize.write_triples(spark, batch, out, stage="again", n_buckets=8)
+    assert _file_state(adapter) == before
+    assert streaming.upsert_epoch(batch, out, 7) is True
+    assert materialize.read_triples(spark, out).count() == 40
+
+
+def test_commit_schema_must_match_the_recorded_one(spark, tmp_path_factory):
+    """A store has one schema: a commit whose columns differ from the
+    recorded schema raises, writes nothing and records no second schema.
+    Column order does not matter (parquet columns resolve by name)."""
+    out = str(tmp_path_factory.mktemp("one_schema"))
+    materialize.write_triples(spark, _rows(spark, [f"S{i}" for i in range(8)]), out, n_buckets=2)
+    adapter = ParquetStoreAdapter(spark, out)
+    spec = adapter.spec()
+    before = _file_state(adapter)
+    batch = _rows(spark, ["S1"], obj="v2")
+    for bad in (
+        batch.withColumn("extra", F.lit(1)),
+        batch.drop("pos"),
+        batch.withColumn("pos", F.col("pos").cast("string")),
+    ):
+        with pytest.raises(ValueError, match="differ from the schema recorded"):
+            materialize.upsert_triples(spark, bad, out)
+        with pytest.raises(ValueError, match="differ from the schema recorded"):
+            materialize.write_triples(spark, bad, out, stage="other")
+    assert adapter.spec() == spec and _file_state(adapter) == before
+    materialize.upsert_triples(spark, batch.select(*reversed(batch.columns)), out)
+    assert adapter.spec().schema == spec.schema
+    assert materialize.read_triples(spark, out).where(F.col("obj") == "v2").count() == 1
