@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import extract, materialize, sources
 from .session import local_frame
+from .store import ParquetStoreAdapter
 from .vocab import DEFAULT_BASE
 
 HTTP_POST = "POST"
@@ -470,8 +471,9 @@ class CityImportAgent:
     analog: the chunking is `fanout` repartitioning of the wholetext
     scan (each task parses its files), the importer pool is the Spark
     scheduler, and the sink is the bucketed manifest-tracked triple
-    store (materialize.write_triples) — resumable where the reference's
-    queue is restartable."""
+    store (materialize.write_triples, or upsert_triples into a store that
+    already holds an import) — resumable where the reference's queue is
+    restartable."""
 
     URI_LISTEN = "/import/source"
     URI_ACTION = "/import/citygml"
@@ -560,8 +562,10 @@ class CityImportAgent:
         base: str = DEFAULT_BASE,
     ) -> dict:
         """URI_ACTION branch: parse every CityGML file under `watch`,
-        extract triples, bulk-load the bucketed store at `target_dir`.
-        Returns the servlet-shaped summary."""
+        extract triples, bulk-load the bucketed store at `target_dir`, or
+        upsert them into it when it already holds an import (features
+        imported again replace their rows, new ones are added). Returns
+        the servlet-shaped summary."""
         pattern = watch if watch.endswith(".gml") else os.path.join(watch, "*.gml")
         # parsed ONCE: the count fills the cache and the write reads it
         docs = sources.read_citygml(spark, pattern).persist()
@@ -570,7 +574,10 @@ class CityImportAgent:
             # 50-feature chunks -> fanout tasks (splitFile/CHUNK_SIZE analog)
             fanout = max(1, -(-n_docs // self.CHUNK_SIZE))
             triples = extract.extract_triples(spark, docs.repartition(fanout), base=base)
-            materialize.write_triples(spark, triples, target_dir, bucket_group=None)
+            if ParquetStoreAdapter(spark, target_dir).exists():
+                materialize.upsert_triples(spark, triples, target_dir, input_snapshot=pattern)
+            else:
+                materialize.write_triples(spark, triples, target_dir, bucket_group=None)
         finally:
             docs.unpersist()
         return {"importedFiles": pattern, "nFeatures": n_docs, "nChunks": fanout}

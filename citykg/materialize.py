@@ -40,7 +40,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schema import MANIFEST_SCHEMA
 from .session import arrow_table, local_frame, stable
-from .store import SORT_ORDER, ParquetStoreAdapter, table_schema
+from .store import ParquetStoreAdapter, table_schema
 
 DEFAULT_BUCKETS = 64
 
@@ -116,6 +116,16 @@ def _adapter(spark: SparkSession, out_dir: str):
     return ParquetStoreAdapter(spark, out_dir)
 
 
+def drop_store(spark: SparkSession, out_dir: str) -> None:
+    """Remove the store at `out_dir`: its data files, its manifest and
+    its table metadata."""
+    adapter = _adapter(spark, out_dir)
+    shutil.rmtree(adapter.path, ignore_errors=True)
+    shutil.rmtree(manifest_path(out_dir), ignore_errors=True)
+    if os.path.exists(adapter.metadata_path):
+        os.remove(adapter.metadata_path)
+
+
 def _columns(schema) -> list[tuple[str, str]]:
     return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
 
@@ -176,10 +186,13 @@ def write_triples(
     between the two re-does at most one group (idempotent: the data dir
     for a bucket is overwritten on retry via dynamic partition overwrite).
 
+    Either way the adapter clusters each write by (graph, bucket), so a
+    load leaves one subject-sorted file per partition, and the per-bucket
+    manifest counts come from parquet FOOTER metadata (no recompute).
+
     `bucket_group=None` selects the SINGLE-PASS bulk load: one write job
-    over the whole frame, per-bucket manifest rows derived afterwards
-    from parquet FOOTER metadata (no recompute, no cache). The grouped
-    path persists the triple frame and re-reads it per group — fine when
+    over the whole frame, no cache. The grouped path persists the triple
+    frame and re-reads it per group — fine when
     resume granularity matters, but at a 100 TB fresh load that cache is
     itself a corpus-sized materialization; the bulk path touches the
     data exactly once and leans on Spark task-level retry instead
@@ -192,7 +205,6 @@ def write_triples(
 
     `fail_after_groups` injects a crash for the resume test.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     adapter = _adapter(spark, out_dir)
     n_buckets = _check_spec(adapter, n_buckets, triples)
     created = not adapter.exists()
@@ -209,12 +221,8 @@ def write_triples(
             )
         t0 = time.time()
         bt = with_bucket(triples, n_buckets)
-        adapter.overwrite_partitions(bt.sortWithinPartitions(*SORT_ORDER))
-        # per-bucket row counts from footer METADATA (the Iceberg files
-        # table); the data is never recomputed or re-scanned
-        counts: dict[int, int] = {}
-        for g, b, _ in adapter.list_partitions():
-            counts[b] = counts.get(b, 0) + sum(adapter.file_counts(g, b).values())
+        adapter.overwrite_partitions(bt)
+        counts = _bucket_counts(adapter, range(n_buckets))
         wall = int((time.time() - t0) * 1000)
         _record_commit(adapter, created, bt, n_buckets)
         _append_manifest(
@@ -230,16 +238,8 @@ def write_triples(
             if fail_after_groups is not None and gi >= fail_after_groups:
                 raise RuntimeError("injected failure for resume test")
             t0 = time.time()
-            part = bt.where(F.col("bucket").isin(grp))
-            # subject-sorted files: parquet row-group min/max stats on subj
-            # then prune point lookups and keep equal subjects adjacent for
-            # downstream merge joins — free at write time, paid back on
-            # every read (Iceberg: the table's sort order spec)
-            adapter.overwrite_partitions(part.sortWithinPartitions(*SORT_ORDER))
-            counts = {
-                int(r.bucket): r.cnt
-                for r in part.groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
-            }
+            adapter.overwrite_partitions(bt.where(F.col("bucket").isin(grp)))
+            counts = _bucket_counts(adapter, grp)
             wall = int((time.time() - t0) * 1000)
             attempt = 1
             _record_commit(adapter, created, bt, n_buckets)
@@ -252,6 +252,17 @@ def write_triples(
             )
     finally:
         bt.unpersist()
+
+
+def _bucket_counts(adapter, buckets) -> dict[int, int]:
+    """Rows per bucket of `buckets`, summed over graphs from parquet
+    footers (the Iceberg files table): a metadata read, no Spark job."""
+    want = set(buckets)
+    counts: dict[int, int] = {}
+    for g, b, _ in adapter.list_partitions():
+        if b in want:
+            counts[b] = counts.get(b, 0) + sum(adapter.file_counts(g, b).values())
+    return counts
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -267,19 +278,25 @@ def upsert_triples(
 ) -> None:
     """Re-import semantics (the reference's importer against an existing
     DB: a feature's new version replaces its previous rows): delete every
-    subject present in the incoming batch from the store, then APPEND the
-    batch as a new manifest-tracked stage keyed by the input snapshot.
+    subject present in the incoming batch from the store and write the
+    batch, as a new manifest-tracked stage keyed by the input snapshot.
 
-    Partition-exact rewrite, then append: the batch is bucketed and
-    cached once; the delete rewrites only the (graph, bucket) partitions
-    that actually hold a row of a batch subject (found by one narrow scan
-    of the batch's buckets, see `_delete_subjects_df`); the append adds
-    files without touching existing ones (Iceberg: a copy-on-write
+    Each touched partition is written once: the batch is bucketed and
+    cached, and its one aggregate counts its rows per (graph, bucket);
+    one narrow scan of the batch's buckets finds the partitions where
+    store rows die (`_delete_subjects_df`). Such a partition gets one
+    overwrite file of its survivors plus its batch rows; one whose rows
+    all die is replaced by its batch rows, or removed if the batch has
+    none there. The batch rows of every other partition are appended,
+    so a batch of new subjects rewrites no file (Iceberg: a copy-on-write
     DELETE + append in one transaction). Both stages' manifest rows
     (`upsert-delete:<snap>`, `upsert:<snap>`) land in one append AFTER
-    the data, so a replay of a crashed upsert re-deletes and re-appends
+    the data, so a replay of a crashed upsert re-deletes and re-writes
     (streaming.upsert_epoch). The incoming subject set stays a DataFrame
     end-to-end — no driver-side collect of ids.
+
+    What an upsert still pays: the aggregate, the dying-rows scan, the
+    survivor pin and up to two writes (the overwrite and the append).
 
     The batch is bucketed with the store's recorded bucket count; an
     `n_buckets` or batch columns that disagree with the recorded spec
@@ -289,30 +306,33 @@ def upsert_triples(
     adapter = _adapter(spark, out_dir)
     n_buckets = _check_spec(adapter, n_buckets, triples)
     created = not adapter.exists()
-    # the batch is extracted ONCE: the per-bucket count fills the cache,
-    # and the delete scan and the append reuse it. A cache, not a
-    # checkpoint: the cached relation reports its real size, so the
-    # planner can broadcast the batch keys into the delete's joins (a
-    # checkpoint carries the source plan's size estimate instead)
+    # the batch is extracted ONCE: the aggregate fills the cache, and the
+    # delete scan and the writes reuse it. A cache, not a checkpoint: the
+    # cached relation reports its real size, so the planner can broadcast
+    # the batch keys into the delete's joins (a checkpoint carries the
+    # source plan's size estimate instead)
     bt = with_bucket(triples, n_buckets).persist()
     try:
-        counts = {
-            int(r.bucket): int(r.n)
-            for r in bt.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+        parts = {
+            (r.graph, int(r.bucket)): int(r.n)
+            for r in bt.groupBy("graph", "bucket").agg(F.count("*").alias("n")).collect()
         }
-        if not counts:
+        if not parts:
             return
+        counts: dict[int, int] = {}
+        for (_, b), n in parts.items():
+            counts[b] = counts.get(b, 0) + n
         rows: list[tuple] = []
-        if not created:
+        if created:
+            adapter.append(bt)
+        else:
             removed = _delete_subjects_df(
-                spark, out_dir, bt, sorted(counts), drop_references=False
+                spark, out_dir, bt, sorted(counts), drop_references=False,
+                batch=(bt, set(parts)),
             )
             wall = int((time.time() - t0) * 1000)
             rows += [(f"upsert-delete:{input_snapshot}", str(b), "", n, "done", 1, wall)
                      for b, n in sorted(removed.items())]
-        # keep the subject-sorted file property write_triples establishes —
-        # row-group subj min/max pruning must survive upserts too
-        adapter.append(bt.sortWithinPartitions(*SORT_ORDER))
         _record_commit(adapter, created, bt, n_buckets)
     finally:
         bt.unpersist()
@@ -373,6 +393,7 @@ def _delete_subjects_df(
     subj_b: DataFrame,
     buckets: list[int],
     drop_references: bool = True,
+    batch: tuple[DataFrame, set] | None = None,
 ) -> dict[int, int]:
     """DataFrame-core of delete_subjects and upsert_triples: remove the
     rows of every subject in `subj_b` (a frame with `subj` and its
@@ -388,9 +409,16 @@ def _delete_subjects_df(
        grouped by (graph, bucket): the exact partitions where rows die
        and how many die in each;
     2. "before" counts from parquet footers (metadata, no data read);
-    3. partitions whose rows all die are cleared, the rest of the
-       touched set is rewritten without its dying rows. Nothing else is
+    3. survivors are read only from the touched partitions where some
+       rows survive, and each touched partition is rewritten once without
+       its dying rows; one whose rows all die is removed. Nothing else is
        read or written.
+
+    `batch` is an upsert's (bucketed rows, their (graph, bucket) set): its
+    rows in a touched partition go into that partition's one rewritten
+    file (so a partition whose rows all die is replaced by them, not
+    removed), and its other rows are appended.
+
     The joins carry NO broadcast hint: callers pass a subject frame with
     accurate size stats (a local relation or a filled cache), so the
     planner broadcasts it when it fits and falls back to a shuffle join
@@ -423,8 +451,15 @@ def _delete_subjects_df(
     for (_, b), n in touched.items():
         removed[b] = removed.get(b, 0) + n
     before = {k: sum(adapter.file_counts(*k).values()) for k in touched}
-    cleared = [k for k, n in touched.items() if n >= before[k]]
-    rewrite = [k for k in touched if k not in cleared]
+    rewrite = [k for k, n in touched.items() if n < before[k]]
+    new_rows, new_parts = batch or (None, set())
+    shared = new_parts & touched.keys()
+    # a partition whose rows all die and that gets no batch rows is
+    # removed explicitly: dynamic overwrite only replaces partitions
+    # present in the written frame (Iceberg's snapshot delete handles
+    # this natively)
+    cleared = [k for k in touched if k not in rewrite and k not in shared]
+    rewritten = None
     if rewrite:
         keep = t.where(_partitions_pred(rewrite)).join(keys, ["subj", "bucket"], "left_anti")
         if drop_references:
@@ -432,13 +467,24 @@ def _delete_subjects_df(
         # materialize the survivor set BEFORE touching the files it reads
         # from (the overwrite would otherwise invalidate the lazy plan's
         # file list)
-        keep = stable(keep.select(*t.columns))
-        adapter.overwrite_partitions(keep.sortWithinPartitions(*SORT_ORDER))
-    # dynamic overwrite only replaces partitions present in `keep`; a
-    # partition whose rows ALL died is cleared explicitly (Iceberg's
-    # snapshot delete handles this natively)
+        rewritten = stable(keep.select(*t.columns))
+    into = rest = new_rows
+    if shared and shared != new_parts:
+        # a broadcast semi/anti join on the (graph, bucket) keys splits the
+        # batch: an OR-chain filter over hundreds of partitions costs the
+        # optimizer seconds of CPU
+        split = local_frame(spark, sorted(shared), "graph string, bucket int")
+        into = new_rows.join(split, ["graph", "bucket"], "left_semi")
+        rest = new_rows.join(split, ["graph", "bucket"], "left_anti")
+    if shared:
+        into = into.select(*t.columns)
+        rewritten = into if rewritten is None else rewritten.unionByName(into)
+    if rewritten is not None:
+        adapter.overwrite_partitions(rewritten)
     for g, b in cleared:
         shutil.rmtree(adapter.partition_dir(g, b))
+    if new_parts - shared:
+        adapter.append(rest)
     return removed
 
 
@@ -465,20 +511,22 @@ def compact_store(
     fail_after_groups: int | None = None,
 ) -> list[tuple[str, int]]:
     """Small-file compaction (Iceberg `rewrite_data_files` with the
-    table's sort order, binpack-to-one): every upsert appends files, so a
-    hot (graph, bucket) partition accumulates many small sorted files —
-    each individually subj-sorted, but the scan pays per-file open cost
-    and row-group pruning fragments. Compaction rewrites only partitions
+    table's sort order, binpack-to-one). Every write is clustered, so a
+    load, a delete and an upsert's rewrite each leave one file per
+    partition they write; files accumulate only where an upsert APPENDS
+    rows of new subjects to a partition where nothing died (each file
+    individually subj-sorted, but the scan pays per-file open cost and
+    row-group pruning fragments). Compaction rewrites only partitions
     whose file count exceeds `max_files_per_partition`, restoring ONE
     subj-sorted file per partition.
 
     Scale posture: the needs-compaction decision is a metadata-only
     listing (Iceberg reads it from manifests; the parquet emulation lists
     partition dirs on the driver — no data is read). The rewrite itself
-    is `repartition(graph, bucket)` so each partition lands wholly in one
-    task -> one output file, with dynamic partition overwrite touching
-    ONLY the compacted partitions. Processed in groups; resume after a
-    mid-run crash needs no manifest consultation for the COMMON cases
+    is the adapter's clustered overwrite, so each partition lands wholly
+    in one task -> one output file, with dynamic partition overwrite
+    touching ONLY the compacted partitions. Processed in groups; resume
+    after a mid-run crash needs no manifest consultation for the COMMON cases
     because it is decided by PHYSICAL state: a group whose overwrite
     committed leaves exactly one file per partition, so the file-count
     test alone excludes it, while a group that crashed pre-commit still
@@ -515,23 +563,18 @@ def compact_store(
     ]
     if not todo:
         return []
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     compacted: list[tuple[str, int]] = []
     groups = [todo[i : i + bucket_group] for i in range(0, len(todo), bucket_group)]
     for gi, grp in enumerate(groups):
         if fail_after_groups is not None and gi >= fail_after_groups:
             raise RuntimeError("injected failure for compaction resume test")
         t0 = time.time()
-        part = (
-            read_triples(spark, out_dir)
-            .where(_partitions_pred((g, b) for g, b, _ in grp))
-            .repartition("graph", "bucket")
-            .sortWithinPartitions(*SORT_ORDER)
-            # materialize BEFORE the overwrite: the rewrite reads the very
-            # files dynamic overwrite will delete (Iceberg's snapshot
-            # isolation gives this for free; the parquet emulation pins the
-            # group in executor memory first)
-            .transform(stable)
+        # materialize BEFORE the overwrite: the rewrite reads the very
+        # files dynamic overwrite will delete (Iceberg's snapshot isolation
+        # gives this for free; the parquet emulation pins the group in
+        # executor memory first)
+        part = stable(
+            read_triples(spark, out_dir).where(_partitions_pred((g, b) for g, b, _ in grp))
         )
         # expected per-partition row counts from the pinned frame — the
         # write-ahead record the post-commit verify and any future resume

@@ -30,7 +30,6 @@ without this conf. (r4 VERDICT "what's wrong" #3.)
 from __future__ import annotations
 
 import argparse
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -119,14 +118,11 @@ def run(argv: list[str] | None = None) -> None:
         fuzzy=args.fuzzy,
     )
     if not args.resume:
-        # fresh run: drop any prior manifest, else write_triples would
-        # treat the previous run's 'done' buckets as already written and
-        # silently skip them (resume semantics are opt-in via --resume)
-        import shutil
-
-        mpath = materialize.manifest_path(args.output)
-        if os.path.exists(mpath):
-            shutil.rmtree(mpath)
+        # fresh run: start from an empty store. A leftover manifest would
+        # mark the previous run's buckets done (write_triples skips them),
+        # and leftover data or metadata would keep its rows and bucket
+        # count (resume semantics are opt-in via --resume)
+        materialize.drop_store(spark, args.output)
     materialize.write_triples(
         spark, triples, args.output, n_buckets=args.buckets, input_snapshot=args.input,
         bucket_group=None if args.bulk else 8,

@@ -16,6 +16,8 @@ Mapping table (parquet emulation -> Iceberg):
 |-------------------------|--------------------------------------------|-----------------------------------------------|
 | append(df)              | write.mode('append').partitionBy(g, b)     | df.writeTo(tbl).append()                      |
 | overwrite_partitions(df)| dynamic partitionOverwriteMode + overwrite | df.writeTo(tbl).overwritePartitions()         |
+| write distribution      | df.repartition(graph, bucket)              | write.distribution-mode=hash plus the table   |
+| (both writes)           | .sortWithinPartitions(graph, bucket, subj) | sort order                                    |
 | read()                  | spark.read.schema(<recorded schema>)       | spark.table(tbl)                              |
 |                         | .parquet(root/triples), partition          |                                               |
 |                         | discovery on the driver                    |                                               |
@@ -27,10 +29,16 @@ Mapping table (parquet emulation -> Iceberg):
 | manifest append / read  | pyarrow write + atomic rename on the       | driver-side snapshot / manifest-list commit   |
 | (materialize.py)        | driver; pyarrow read of `_manifest`        |                                               |
 
-The emulation's upsert (materialize.upsert_triples) is a DELETE on the
-touched (graph, bucket) partitions — overwrite_partitions of their
-survivors, found by one narrow scan — plus a fast append of the batch:
-Iceberg's copy-on-write `DELETE` + `append`.
+The adapter owns the layout: both writes cluster their rows by
+(graph, bucket) and sort them by SORT_ORDER, so a write lands one
+subject-sorted file in each partition it touches, whatever the number of
+input tasks. Callers pass rows in any order.
+
+The emulation's upsert (materialize.upsert_triples) writes each touched
+partition once: a partition where rows die gets one overwrite file of
+its survivors (found by one narrow scan) plus the batch's rows there;
+the batch's other rows are a fast append: Iceberg's copy-on-write
+`DELETE` + `append` in one commit.
 
 Semantics the conformance suite asserts on BOTH sides of the swap:
 
@@ -119,16 +127,29 @@ class ParquetStoreAdapter:
         self.metadata_path = os.path.join(out_dir, "metadata.json")
 
     # -- writes ---------------------------------------------------------
+    def _clustered(self, df: DataFrame):
+        """`df`'s writer with the table's write distribution: every row of
+        a (graph, bucket) goes to one task, sorted by SORT_ORDER, so the
+        write leaves one subject-sorted file per partition it touches
+        (Iceberg: write.distribution-mode=hash plus the sort order).
+        Subject-sorted files let parquet row-group min/max stats on subj
+        prune point lookups."""
+        return (
+            df.repartition(*self.partition_cols)
+            .sortWithinPartitions(*SORT_ORDER)
+            .write.partitionBy(*self.partition_cols)
+        )
+
     def append(self, df: DataFrame) -> None:
         """Add data files without touching existing ones (Iceberg:
         writeTo(...).append() — fast-append snapshot)."""
-        df.write.mode("append").partitionBy(*self.partition_cols).parquet(self.path)
+        self._clustered(df).mode("append").parquet(self.path)
 
     def overwrite_partitions(self, df: DataFrame) -> None:
         """Replace exactly the partitions present in `df` (Iceberg:
         writeTo(...).overwritePartitions() — dynamic REPLACE commit)."""
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df.write.mode("overwrite").partitionBy(*self.partition_cols).parquet(self.path)
+        self._clustered(df).mode("overwrite").parquet(self.path)
 
     # -- reads ----------------------------------------------------------
     def read(self) -> DataFrame:

@@ -272,12 +272,12 @@ def stream_upsert_store(
     Exactly-once under replay: foreachBatch can re-deliver an epoch after
     a crash between the sink work and the offset-log commit. The store's
     own lineage manifest is the idempotence ledger — upsert_triples
-    records stage `upsert:epoch-<id>` only AFTER its append completes, so
+    records stage `upsert:epoch-<id>` only AFTER its writes complete, so
     a replayed epoch whose stage is already present is skipped outright.
-    A crash mid-upsert (delete applied and/or append partially visible,
+    A crash mid-upsert (rewrite and/or append partially visible,
     manifest row absent) is also safe to replay: the delete phase keys on
     the incoming batch's subject set, so it first removes any
-    partially-appended rows of those same subjects before re-appending —
+    partially-written rows of those same subjects before re-writing them —
     the converged state is identical to a single clean application.
     (Iceberg: the same pattern keyed on a snapshot summary property /
     WAP commit id instead of the manifest stage.)

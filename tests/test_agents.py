@@ -299,6 +299,56 @@ def test_import_files_counts_and_releases_its_cache(spark, tmp_path, monkeypatch
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
 
 
+def _tiles(monkeypatch, tmp_path, seed, n_buildings):
+    """A generated CityGML tile set under tmp_path and its per-graph
+    row counts from the vocabulary templates."""
+    monkeypatch.syspath_prepend(str(pathlib.Path(__file__).resolve().parents[1] / "perfbench"))
+    from citygml_gen import CityGMLSet
+    from templates import graph_counts
+
+    gen = CityGMLSet(seed=seed, n_buildings=n_buildings)
+    tiles = str(tmp_path / f"tiles_{seed}")
+    gen.write(tiles)
+    return tiles, graph_counts(gen.spans())
+
+
+def _graph_rows(spark, store):
+    rows = materialize.read_triples(spark, store).groupBy("graph").count().collect()
+    return {r["graph"]: r["count"] for r in rows}
+
+
+def test_import_of_several_chunks_writes_one_file_per_partition(spark, tmp_path, monkeypatch):
+    """An import whose features span several 50-feature chunk tasks still
+    leaves one file per (graph, bucket): the store write clusters rows
+    by partition, whatever the number of input tasks."""
+    from citykg.store import ParquetStoreAdapter
+
+    tiles, want = _tiles(monkeypatch, tmp_path, seed=5, n_buildings=60)
+    store = str(tmp_path / "store")
+    out = CityImportAgent().import_files(spark, tiles, store)
+    assert out["nChunks"] >= 2
+    assert _graph_rows(spark, store) == want
+    parts = ParquetStoreAdapter(spark, store).list_partitions()
+    assert parts and {n for _, _, n in parts} == {1}
+
+
+def test_second_import_into_a_store_is_kept(spark, tmp_path, monkeypatch):
+    """Importing a second, distinct tile set into a store that holds an
+    import adds its rows; importing the same tiles again replaces their
+    rows and leaves the row count unchanged."""
+    first, want_first = _tiles(monkeypatch, tmp_path, seed=1, n_buildings=4)
+    second, want_second = _tiles(monkeypatch, tmp_path, seed=2, n_buildings=4)
+    store = str(tmp_path / "store")
+    agent = CityImportAgent()
+    agent.import_files(spark, first, store)
+    agent.import_files(spark, second, store)
+    both = {g: want_first.get(g, 0) + want_second.get(g, 0)
+            for g in {*want_first, *want_second}}
+    assert _graph_rows(spark, store) == both
+    assert agent.import_files(spark, second, store)["nFeatures"] > 0
+    assert _graph_rows(spark, store) == both
+
+
 # ---------------------------------------------------------------------------
 # ThematicSurfaceDiscoveryAgent / UPRNAgent / GraphInferenceAgent
 # ---------------------------------------------------------------------------

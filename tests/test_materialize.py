@@ -6,7 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from citykg import materialize
+from citykg import materialize, pipeline
 from citykg.extract import extract_triples
 from citykg.fixtures import synth_docs
 from citykg.store import ParquetStoreAdapter
@@ -330,6 +330,66 @@ def test_upsert_of_an_empty_batch_changes_nothing(spark, small_store):
     assert materialize.read_triples(spark, out).count() == n
 
 
+def test_upsert_of_a_mixed_batch(spark, small_store):
+    """One re-imported subject and one new subject in a partition where
+    nothing dies: the first's partition is rewritten as one file of its
+    survivors plus the batch row, the second's row is appended."""
+    out = small_store
+    adapter = ParquetStoreAdapter(spark, out)
+    n = materialize.read_triples(spark, out).count()
+    materialize.upsert_triples(
+        spark, _rows(spark, [("S0", "building", "v2"), ("N0", "cityobject", "n")]),
+        out, input_snapshot="v2",
+    )
+    assert _subject_rows(spark, out, "S0") == [("building", "v2")]
+    assert _subject_rows(spark, out, "N0") == [("cityobject", "n")]
+    assert materialize.read_triples(spark, out).count() == n + 1
+    files = {(g, b): k for g, b, k in adapter.list_partitions()}
+    assert files[("building", _bucket(spark, "S0"))] == 1
+    assert files[("cityobject", _bucket(spark, "N0"))] == 2
+
+
+def test_reimport_upsert_writes_each_partition_once(spark, triples, tmp_path_factory):
+    """A re-import rewrites each partition where rows die as ONE file of
+    its survivors plus its batch rows, so the store keeps one file per
+    partition and compaction finds nothing to do; the store then holds
+    the old rows of other subjects and the batch's rows."""
+    out = str(tmp_path_factory.mktemp("store_reimport"))
+    materialize.write_triples(spark, triples, out, n_buckets=8, input_snapshot="v1")
+    adapter = ParquetStoreAdapter(spark, out)
+    assert {k for _, _, k in adapter.list_partitions()} == {1}
+    subjects = [r.subj for r in triples.select("subj").distinct().limit(6).collect()]
+    batch = triples.where(F.col("subj").isin(subjects)).withColumn(
+        "obj", F.concat("obj", F.lit("_v2"))
+    )
+    before = _file_mtimes(out)
+    materialize.upsert_triples(spark, batch, out, input_snapshot="v2")
+    assert set(_file_mtimes(out)) != set(before)
+    assert {k for _, _, k in adapter.list_partitions()} == {1}
+    assert materialize.compact_store(spark, out) == []
+    key = ["subj", "pred", "obj", "graph"]
+    want = triples.where(~F.col("subj").isin(subjects)).select(*key).unionByName(
+        batch.select(*key)
+    )
+    got = materialize.read_triples(spark, out).select(*key)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_fresh_pipeline_run_starts_from_an_empty_store(spark, tmp_path):
+    """A run without --resume into the output of an earlier, larger run
+    leaves exactly the rows of its own input."""
+    first, second = str(tmp_path / "first"), str(tmp_path / "second")
+    synth_docs(spark, SF_SMOKE).write.parquet(first)
+    spark.read.parquet(first).limit(5).write.parquet(second)
+    out = str(tmp_path / "store")
+    for src in (first, second):
+        pipeline.run(["--input", src, "--output", out, "--buckets", "8"])
+    key = ["subj", "pred", "obj", "graph", "doc_id", "span_idx", "pos"]
+    want = pipeline.build_triples(spark, spark.read.parquet(second)).select(*key).collect()
+    got = materialize.read_triples(spark, out).select(*key).collect()
+    assert want and sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_compact_store(spark, triples, tmp_path_factory):
     """Upserts fragment partitions into many small files; compaction
     restores one subj-sorted file per partition with identical data, is
@@ -340,8 +400,9 @@ def test_compact_store(spark, triples, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("store_compact"))
     materialize.write_triples(spark, triples, out, n_buckets=8, input_snapshot="v1")
     before = materialize.read_triples(spark, out)
-    # two upsert batches re-touching existing subjects -> appended files
-    some = [r.subj for r in triples.select("subj").distinct().limit(6).collect()]
+    # two upsert batches of new subjects -> files appended to partitions
+    # where nothing dies (a re-import rewrites its partitions as one file)
+    some = [f"iri://new-subject-{i}/" for i in range(6)]
     for snap, subjects in (("v2", some[:3]), ("v3", some[3:])):
         batch = spark.createDataFrame(
             [(s, "ocgml:name", f"renamed_{snap}", "literal", None, "cityobject",
@@ -400,7 +461,7 @@ def test_compact_store(spark, triples, tmp_path_factory):
     # a LATER upsert re-fragments an already-compacted partition: it must
     # become eligible again (recurring maintenance, not once-per-stage)
     batch = spark.createDataFrame(
-        [(some[0], "ocgml:name", "renamed_v4", "literal", None, "cityobject",
+        [("iri://new-subject-6/", "ocgml:name", "renamed_v4", "literal", None, "cityobject",
           "d", 0, 0)],
         "subj string, pred string, obj string, obj_type string, "
         "datatype string, graph string, doc_id string, span_idx int, pos int",
@@ -413,7 +474,7 @@ def test_compact_store(spark, triples, tmp_path_factory):
         map(tuple, materialize.read_triples(spark, out).select(
             "subj", "pred", "obj", "graph").collect())
     )
-    assert ("renamed_v4" in {o for _, _, o, _ in again}) and len(again) == len(expect)
+    assert ("renamed_v4" in {o for _, _, o, _ in again}) and len(again) == len(expect) + 1
 
 
 def test_compact_store_mid_commit_crash(spark, triples, tmp_path_factory):
@@ -428,9 +489,9 @@ def test_compact_store_mid_commit_crash(spark, triples, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("store_crash"))
     materialize.write_triples(spark, triples, out, n_buckets=4, input_snapshot="v1")
-    subj = triples.select("subj").distinct().limit(1).collect()[0].subj
+    # a new subject: its row is appended next to the partition's file
     batch = spark.createDataFrame(
-        [(subj, "ocgml:name", "renamed_crash", "literal", None, "cityobject",
+        [("iri://new-subject-crash/", "ocgml:name", "renamed_crash", "literal", None, "cityobject",
           "d", 0, 0)],
         "subj string, pred string, obj string, obj_type string, "
         "datatype string, graph string, doc_id string, span_idx int, pos int",

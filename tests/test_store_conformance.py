@@ -6,7 +6,9 @@ An Iceberg-backed adapter must pass this module unchanged (minus the
 file-path assertions, which read through adapter metadata methods only).
 """
 
+import ast
 import os
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,6 +79,57 @@ def test_overwrite_touches_only_present_partitions(spark, store):
             assert after[key] == before[key], f"overwrite touched unrelated partition {key}"
 
 
+@pytest.mark.parametrize("write", ["append", "overwrite_partitions"])
+def test_write_leaves_one_subject_sorted_file_per_partition(spark, tmp_path_factory, write):
+    """A write clusters its rows by (graph, bucket) and sorts them by
+    subject (Iceberg: hash write distribution plus the sort order): rows
+    of every partition spread over 4 input partitions land in exactly one
+    file per (graph, bucket), sorted by `subj`."""
+    import pyarrow.parquet as pq
+
+    adapter = ParquetStoreAdapter(spark, str(tmp_path_factory.mktemp(write)))
+    rows = _frame(spark, [f"W{i:02d}" for i in reversed(range(60))]).unionByName(
+        _frame(spark, [f"X{i:02d}" for i in range(60)], graph="cityobject")
+    ).repartition(4)
+    assert rows.rdd.getNumPartitions() >= 3
+    getattr(adapter, write)(rows)
+    parts = adapter.list_partitions()
+    assert len(parts) == 8 and all(n == 1 for _, _, n in parts), parts
+    for g, b, _ in parts:
+        (f,) = adapter.file_counts(g, b)
+        subs = pq.read_table(os.path.join(adapter.partition_dir(g, b), f)).column("subj")
+        assert subs.to_pylist() == sorted(subs.to_pylist())
+
+
+def _layout_call(node):
+    """A `repartition` / `sortWithinPartitions` call on the partition
+    columns or the sort order."""
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("repartition", "sortWithinPartitions")):
+        return False
+    args = [ast.unparse(a) for a in node.args]
+    return args[:2] == ["'graph'", "'bucket'"] or any(
+        "SORT_ORDER" in a or "partition_cols" in a for a in args
+    )
+
+
+def test_write_layout_lives_only_in_the_adapter():
+    """The table's write distribution and sort order are applied in
+    store.py alone: no other module of the package, nor the entry
+    module, clusters or sorts rows for a store write itself."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    sources = sorted((root / "citykg").rglob("*.py")) + [root / "__spark_entry__.py"]
+    hits = sorted(
+        (py.relative_to(root).as_posix(), node.func.attr)
+        for py in sources
+        for node in ast.walk(ast.parse(py.read_text()))
+        if _layout_call(node)
+    )
+    assert hits == [
+        ("citykg/store.py", "repartition"), ("citykg/store.py", "sortWithinPartitions")
+    ], hits
+
+
 def test_partition_pruning_at_scan(spark, store):
     """Conformance #3: a (graph, bucket) predicate must prune at the scan
     (PartitionFilters) — not filter after reading every partition."""
@@ -119,8 +172,10 @@ def test_commit_protocol_brackets_every_compaction(spark, tmp_path_factory):
     materialize.write_triples(
         spark, _frame(spark, [f"P{i}" for i in range(30)]), out, n_buckets=4
     )
-    batch = _frame(spark, ["P3", "P5"], obj="v2")
+    # new subjects: their rows are appended beside the partitions' files
+    batch = _frame(spark, ["Q3", "Q5"], obj="v2")
     materialize.upsert_triples(spark, batch.drop("bucket"), out, n_buckets=4)
+    assert max(n for _, _, n in ParquetStoreAdapter(spark, out).list_partitions()) > 1
     compacted = materialize.compact_store(spark, out)
     assert compacted
     m = materialize.read_manifest(spark, out).where(F.col("stage") == "compact").collect()
@@ -224,10 +279,12 @@ def test_every_commit_records_the_table_spec(spark, tmp_path_factory):
         spark, _rows(spark, [f"S{i}" for i in range(20)]), out, n_buckets=4, bucket_group=2
     )
     assert adapter.spec().snapshot_id == 2  # one per bucket group
-    materialize.upsert_triples(spark, _rows(spark, ["S1"], obj="v2"), out)
+    # new subjects: their rows are appended beside the partitions' files
+    materialize.upsert_triples(spark, _rows(spark, [f"N{i}" for i in range(8)], obj="v2"), out)
     assert adapter.spec().snapshot_id == 3
     materialize.delete_subjects(spark, out, ["S2"])
     assert adapter.spec().snapshot_id == 4
+    assert max(n for _, _, n in adapter.list_partitions()) > 1
     assert len(materialize.compact_store(spark, out, bucket_group=256)) > 0
     spec = adapter.spec()
     assert spec.snapshot_id == 5 and spec.n_buckets == 4
